@@ -133,7 +133,15 @@ def test_compaction_preserves_data_and_reduces_files(spark, transcripts, tmp_pat
     """compact_tier: value-identical day rewrite into the size-ideal file
     count, atomic pointer swap, superseded version GC'd, replay a no-op."""
     store = RollupStore(spark, str(tmp_path / "c"))
-    incremental_run(transcripts, store, SETTINGS, expire=False)
+    # fragment the days on purpose: without AQE coalescing, the MERGE
+    # writes one file per shuffle partition that holds rows of a day
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        incremental_run(transcripts, store, SETTINGS, expire=False)
+    finally:
+        spark.conf.set(coalesce, prev)
     before = _tier_rows(store, "1m")
     day0, ver0 = sorted(store.manifest.tiers["1m"].items())[0]
     files_before = len(store._day_files("1m", day0, ver0))
@@ -151,6 +159,50 @@ def test_compaction_preserves_data_and_reduces_files(spark, transcripts, tmp_pat
     assert store.compact_tier("1m", "compact-1", target_bytes=1 << 30) == []
     # already-ideal days are skipped by the size heuristic
     assert store.compact_tier("1m", "compact-2", target_bytes=1 << 30) == []
+
+
+def test_lineage_rows_match_committed_versions(spark, transcripts, tmp_path):
+    """Lineage row counts come from the staged files' parquet footers, not
+    from a Spark read-back: each must equal a count() of the committed
+    version it describes — for a bootstrap run, a merge into committed
+    days, and a compaction."""
+    store = RollupStore(spark, str(tmp_path / "f"))
+
+    def check_last_run():
+        run = store.manifest.runs[-1]
+        assert run["partitions"]
+        for p in run["partitions"]:
+            committed = store.read_versions(p["tier"], {p["day"]: run["run_id"]})
+            assert p["rows"] == committed.count() > 0, (run["run_id"], p)
+
+    cutoff = transcripts.agg(F.expr("percentile(cast(ts as double), 0.5)")).collect()[0][0]
+    early = transcripts.where(F.col("ts").cast("double") <= cutoff)
+    incremental_run(early, store, SETTINGS, expire=False)
+    check_last_run()
+    incremental_run(transcripts, store, SETTINGS, expire=False)
+    check_last_run()
+    store.compact_tier("1h", "compact-1", target_bytes=1 << 30, slack=0)
+    check_last_run()
+    assert len(store.manifest.runs) == 3
+
+
+def test_merge_tiers_rejects_staged_day_outside_affected(spark, transcripts, tmp_path):
+    """The staged (tier, day) dirs must all lie in ``affected``: a day
+    outside it never had its committed rows unioned in, so committing it
+    would drop them. The MERGE raises and leaves nothing staged."""
+    from tsprofiler_spark.operators.ingest import derive_series
+    from tsprofiler_spark.plans.retention import _tier_partials, scan_batch
+
+    store = RollupStore(spark, str(tmp_path / "g"))
+    days = scan_batch(transcripts)[2]
+    assert len(days) >= 2, "fixture must span multiple days"
+    with pytest.raises(ValueError, match="not covered by affected"):
+        store.merge_tiers(
+            {"1m": _tier_partials(derive_series(transcripts), "1m")},
+            "guard-1", affected=days[1:],
+        )
+    assert not os.path.exists(os.path.join(store.base, "_staging-guard-1"))
+    assert store.read_tier("1m") is None
 
 
 def test_read_tier_day_range_prunes_paths(spark, transcripts, tmp_path):

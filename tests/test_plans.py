@@ -81,13 +81,10 @@ def test_tiers_bootstrap_single_exchange(spark, transcripts_path):
     inserts no aggregation exchange, and merge_tiers(distribute=False)
     writes straight from the aggregation output. Pinned so a refactor can't
     silently reintroduce the second full-size shuffle."""
-    from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
-    from tsprofiler_spark.plans.retention import _tier_partials
+    from tsprofiler_spark.plans.retention import _finest_partials
 
     t = spark.read.parquet(transcripts_path)
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    series = derive_series(t).repartition(n, *SERIES_COLS)
-    finest = _tier_partials(series, "1m").withColumn(
+    finest = _finest_partials(t).withColumn(
         "day", F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
     )
     plan = _plan(finest)

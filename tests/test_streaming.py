@@ -490,3 +490,76 @@ def test_distinct_streams_over_one_store_do_not_collide(spark, transcripts, tmp_
     # true replay (same stream, same batch) still a no-op
     assert process_microbatch(first, 0, store, stream_id="q1") == []
     assert store.read_tier("1m").agg(F.sum("n")).collect()[0][0] == n_after_q2
+
+
+def test_late_microbatch_job_budget(spark, transcripts, tmp_path):
+    """A small late micro-batch into a committed day runs a fixed handful
+    of Spark jobs — the watermark scan, the 1m MERGE write and the coarse
+    (1h + 1d) write with their shuffle stages — and no schema-inference,
+    read-back count, cache-pinning or empty-check jobs. Its coarse write
+    coalesces to one task: one file per tier for the one touched day."""
+    from pyspark.sql import functions as F
+
+    store = RollupStore(spark, str(tmp_path / "s"))
+    process_microbatch(transcripts, 0, store)
+    day = min(store.manifest.tiers["1m"])
+    late = transcripts.where(
+        (F.to_date("ts") == day) & (F.col("turn_idx") % 17 == 0)
+    ).withColumn("turn_idx", F.col("turn_idx") + 100_000)
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "late-microbatch")
+    try:
+        lineage = process_microbatch(late, 1, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("late-microbatch")
+    assert lineage and 0 < len(jobs) <= 9, jobs
+
+    run_id = store.manifest.runs[-1]["run_id"]
+    coarse_files = [
+        f
+        for tier in ("1h", "1d")
+        for d, v in store.manifest.tiers[tier].items()
+        if v == run_id
+        for f in store._day_files(tier, d, v)
+    ]
+    assert 0 < len(coarse_files) <= 2, coarse_files
+
+
+def test_empty_microbatch_commits_nothing(spark, transcripts, tmp_path):
+    """An empty micro-batch returns no lineage and leaves the manifest's
+    runs and watermark untouched (on disk too)."""
+    store = RollupStore(spark, str(tmp_path / "s"))
+    process_microbatch(transcripts, 0, store)
+    runs, wm = list(store.manifest.runs), store.manifest.watermark
+
+    assert process_microbatch(transcripts.where("false"), 1, store) == []
+    for m in (store.manifest, RollupStore(spark, store.base).manifest):
+        assert (m.runs, m.watermark) == (runs, wm)
+    assert not store.manifest.has_run("stream-1")
+
+
+@pytest.mark.parametrize(
+    "tiers_cfg",
+    [
+        {"1m": {"ttl": 30}},
+        {"1h": {"ttl_days": "30"}},
+        {"1d": 3650},
+        {"1m": {"ttl_days": 30}, "1h": None},
+    ],
+)
+def test_start_rollup_stream_rejects_malformed_tiers_cfg(spark, tmp_path, tiers_cfg):
+    """A malformed tiers_cfg fails at the call, before the query starts —
+    not with a KeyError inside foreachBatch after a merge has committed."""
+    inbox = str(tmp_path / "inbox")
+    os.makedirs(inbox)
+    ckpt = str(tmp_path / "ckpt")
+    store = RollupStore(spark, str(tmp_path / "s"))
+    with pytest.raises(ValueError, match="ttl_days"):
+        start_rollup_stream(
+            stream_transcripts(spark, inbox), store, SETTINGS, ckpt,
+            tiers_cfg=tiers_cfg,
+        )
+    assert not os.path.exists(ckpt)
+    assert not spark.streams.active

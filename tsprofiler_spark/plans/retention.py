@@ -34,6 +34,13 @@ def _tier_partials(series: DataFrame, tier: str) -> DataFrame:
     )
 
 
+def _finest_partials(transcripts: DataFrame) -> DataFrame:
+    """1m partials behind ONE series-key shuffle with no fixed partition
+    count: AQE coalesces it for a small batch (see merge_transcript_batch)."""
+    series = derive_series(transcripts).repartition(*SERIES_COLS)
+    return _tier_partials(series, "1m")
+
+
 def _cascade_partials(finer: DataFrame, tier: str) -> DataFrame:
     trunc = TIER_TRUNC[tier]
     return finer.groupBy(
@@ -56,14 +63,18 @@ def touched_days() -> F.Column:
     Collected as DATE values, not pre-formatted strings: ``to_date`` is one
     integer division per row while ``date_format`` allocates a string per
     row BEFORE the partial aggregation dedups (measured ~40% of the
-    watermark-scan stage's CPU at 41M rows). Callers format the handful of
-    collected dates driver-side with :func:`format_days`."""
+    watermark-scan stage's CPU at 41M rows). :func:`scan_batch` formats
+    the handful of collected dates driver-side."""
     return F.collect_set(F.to_date("ts"))
 
 
-def format_days(days) -> list[str]:
-    """Driver-side yyyy-MM-dd formatting of a collected `touched_days` set."""
-    return [d.isoformat() for d in days or []]
+def scan_batch(batch: DataFrame) -> tuple[int, object, list[str]]:
+    """ONE scan of a batch: its row count, max ``ts`` and touched
+    yyyy-MM-dd day partitions (shared by every tier MERGE)."""
+    n, wm, days = batch.agg(
+        F.count(F.lit(1)), F.max("ts"), touched_days()
+    ).collect()[0]
+    return n, wm, [d.isoformat() for d in days or []]
 
 
 def merge_transcript_batch(
@@ -93,8 +104,7 @@ def merge_transcript_batch(
     if store.manifest.has_run(run_id):
         return []  # replayed micro-batch / re-run — already committed
     if affected is None:
-        affected = format_days(transcripts.agg(touched_days()).collect()[0][0])
-    series = derive_series(transcripts)
+        affected = scan_batch(transcripts)[2]
     # ONE exchange for the whole finest-tier stage: hash-distribute the raw
     # series rows by the series key ONCE. The 1m groupBy clusters on a
     # SUPERSET of (series cols), so hash partitioning on the subset already
@@ -113,17 +123,14 @@ def merge_transcript_batch(
     # already has; for pathological single-hot-series corpora the segmented
     # variants (operators/ingest.py gap_fill_segmented, bucketize_segmented)
     # are the documented salting fallback.
-    spark = transcripts.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    series = series.repartition(n_shuffle, *SERIES_COLS)
-    # Two-step staging, ZERO large executor-memory caches: the finest (1m)
+    # Two-step staging, ZERO executor-memory caches: the finest (1m)
     # partials go raw-scan -> groupBy -> staged parquet in one write job,
     # then the 1h/1d cascades read that STAGED PARQUET back (columnar,
     # compressed — storage is the materialization, exactly what cascading
     # from a real Iceberg 1m table does). Caching 40M+ deserialized partial
     # rows in the executor heap instead measurably throttles the N-executor
     # configuration (spill + GC) without saving any scan of the raw data.
-    finest = _tier_partials(series, "1m")
+    finest = _finest_partials(transcripts)
     lineage, pointers = store.merge_tiers(
         {"1m": finest}, run_id, affected=affected, distribute=False
     )
@@ -182,11 +189,10 @@ def merge_transcript_batch(
     else:
         cascade_src = staged_1m.drop("day")
     # 1d cascades from the 1h partials (not from 1m): sums/min/max compose,
-    # and the 1h->1d re-aggregation reads 60x fewer rows. The 1h partials
-    # table is tiny (one row per series-hour), so IT is worth a pinned
-    # cache to keep the 1d branch from re-reading the 1m files.
-    coarse_1h = _cascade_partials(cascade_src, "1h").persist()
-    coarse_1h.count()  # pin eagerly: both union branches below consume it
+    # and the 1h->1d re-aggregation reads 60x fewer rows. No cache: both
+    # tiers land in ONE write, whose plan holds the 1h aggregation's
+    # exchange twice — Spark reuses it, so the 1m files are scanned once.
+    coarse_1h = _cascade_partials(cascade_src, "1h")
     coarse_1d = _cascade_partials(coarse_1h, "1d")
     # replace=True: for non-resurrected days the cascade source is the
     # staged 1m day's COMPLETE merged content, so the cascaded 1h/1d
@@ -204,7 +210,6 @@ def merge_transcript_batch(
     )
     lineage += tier_lineage
     pointers.update(tier_ptrs)
-    coarse_1h.unpersist()
     # the resurrected days' new 1m versions still lack the expired history:
     # flag them durably IN THE SAME atomic manifest commit
     store.commit_run(
@@ -228,12 +233,7 @@ def incremental_run(
     new = transcripts
     if wm is not None:
         new = transcripts.where(F.col("ts") > F.lit(wm).cast("timestamp"))
-    # one scan for the row count, the new watermark AND the touched day
-    # partitions (shared by every tier MERGE below)
-    n_new, new_wm, affected = new.agg(
-        F.count(F.lit(1)), F.max("ts"), touched_days()
-    ).collect()[0]
-    affected = format_days(affected)
+    n_new, new_wm, affected = scan_batch(new)
     if n_new == 0:
         return {"run_id": None, "new_rows": 0, "partitions": []}
     # deterministic run_id from the data window: a crashed-then-retried run

@@ -31,6 +31,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +39,31 @@ from tsprofiler_spark.operators.ingest import SERIES_COLS
 
 TIER_KEY = SERIES_COLS + ["metric", "bucket_start"]
 PARTIALS = ["n", "s1", "s2", "vmin", "vmax"]
+# Data columns of every tier file. Reads pass it explicitly: inferring it
+# from parquet footers costs one Spark job per read.
+TIER_SCHEMA = ", ".join(
+    [f"{c} STRING" for c in SERIES_COLS + ["metric"]]
+    + ["bucket_start TIMESTAMP", "n BIGINT"]
+    + [f"{c} DOUBLE" for c in PARTIALS[1:]]
+)
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [
+        os.path.join(dp, f)
+        for dp, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
+def _file_stats(files: list[str]) -> tuple[int, int]:
+    """(rows, bytes) of parquet files; rows come from the footers, so
+    counting them costs no Spark job."""
+    return (
+        sum(pq.read_metadata(f).num_rows for f in files),
+        sum(os.path.getsize(f) for f in files),
+    )
 
 
 LINEAGE_KEEP = 256  # full per-day lineage kept for the most recent N runs
@@ -173,7 +199,11 @@ class RollupStore:
     def read_versions(self, tier: str, pointers: dict[str, str]) -> DataFrame:
         """Read a specific {day: version} set of a tier (committed or staged)."""
         paths = [self._day_dir(tier, day, ver) for day, ver in sorted(pointers.items())]
-        df = self.spark.read.option("basePath", self._tier_path(tier)).parquet(*paths)
+        df = (
+            self.spark.read.schema(TIER_SCHEMA)
+            .option("basePath", self._tier_path(tier))
+            .parquet(*paths)
+        )
         # partition inference types day= as DATE; keep the string contract
         return df.drop("v").withColumn(
             "day", F.date_format(F.col("day"), "yyyy-MM-dd")
@@ -263,7 +293,7 @@ class RollupStore:
         self,
         partials_by_tier: dict[str, DataFrame],
         run_id: str,
-        affected: list[str] | None = None,
+        affected: list[str],
         replace: bool = False,
         distribute: bool = True,
         merge_days: list[str] | None = None,
@@ -280,20 +310,12 @@ class RollupStore:
         rename per (tier, day) into the versioned location (the sandbox
         analogue of an Iceberg multi-table snapshot commit).
 
-        ``affected`` (the touched yyyy-MM-dd day partitions) can be passed
-        in when the caller already knows it — the set is identical for
-        every tier of one batch (day truncation of the same bucket range).
+        ``affected`` is the set of touched yyyy-MM-dd day partitions — the
+        same for every tier of one batch (day truncation of the same bucket
+        range), so callers fold it into their watermark aggregation.
 
         Returns (lineage, pointers) with pointers = {tier: {day: run_id}}.
         """
-        if affected is None:
-            days = None
-            for df in partials_by_tier.values():
-                d = df.select(
-                    F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd").alias("day")
-                ).distinct()
-                days = d if days is None else days.union(d)
-            affected = [r.day for r in days.distinct().collect()]
         plans = [
             self._merged_tier_plan(
                 df, tier, affected, replace=replace, merge_days=merge_days
@@ -307,21 +329,21 @@ class RollupStore:
         # staged parquet itself is the materialization (columnar, compressed
         # — a fraction of a deserialized JVM cache, and what an Iceberg
         # MERGE produces anyway). Row counts for lineage/validation come
-        # from a cheap metadata-ish count over the staged files afterwards.
+        # from the staged files' parquet footers afterwards (no Spark job).
         #
         # ``distribute=True``: repartition by (tier, day, conv_id-hash) — NOT
         # by partition dirs alone: one shuffle partition per (tier, day)
         # would serialize the write to #dirs tasks and leave one giant file
         # per partition, strangling downstream scan parallelism. Multiple
         # files per dir is fine (and matches how an Iceberg MERGE
-        # distributes its writes).
+        # distributes its writes). No explicit partition count, so AQE can
+        # coalesce a tiny batch's write to a task (and file) or two.
         #
         # ``distribute=False``: the caller guarantees the partials are
-        # already hash-distributed across ~shuffle.partitions tasks (e.g.
-        # retention pre-partitions the raw series by the series key, which
-        # the 1m groupBy then reuses) — writing directly saves a FULL
-        # second shuffle of the merged tier, the single largest exchange in
-        # the job at finest-tier scale. Each task then writes one file per
+        # already hash-distributed by the series key (retention
+        # pre-partitions the raw series, which the 1m groupBy then reuses)
+        # — writing directly saves a FULL second shuffle of the merged tier,
+        # the single largest exchange in the job at finest-tier scale. Each task then writes one file per
         # (tier, day) dir it holds rows for; with the series-key layout a
         # conversation's rows stay colocated in one file, which is exactly
         # what lets the 1h/1d cascade's map-side combine collapse 60:1.
@@ -335,8 +357,7 @@ class RollupStore:
         # (operators/compress.py compress_points_colocated).
         staging = os.path.join(self.base, f"_staging-{run_id}")
         if distribute:
-            n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            merged = merged.repartition(n_out, "tier", "day", "conv_id")
+            merged = merged.repartition("tier", "day", "conv_id")
         merged = merged.sortWithinPartitions(
             "tier", "day", *SERIES_COLS, "metric", "bucket_start"
         )
@@ -358,20 +379,19 @@ class RollupStore:
                 self.spark.conf.unset(planned)
             else:
                 self.spark.conf.set(planned, prev)
-        back = self.spark.read.parquet(staging)
-        per_key = {
-            (r.tier, r.day): r.rows
-            for r in back.groupBy(
-                "tier", F.date_format("day", "yyyy-MM-dd").alias("day")
-            )
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        }
+        # the staged (tier, day) set is the partition dirs the write created
+        staged = sorted(
+            (t[len("tier="):], d[len("day="):])
+            for t in os.listdir(staging)
+            if t.startswith("tier=")
+            for d in os.listdir(os.path.join(staging, t))
+            if d.startswith("day=")
+        )
         # a staged day outside `affected` means its existing rows were never
         # unioned in — committing would silently drop them. The invariant
         # (ts-derived touched_days covers every tier-bucket day) is cheap to
-        # enforce here because per_key is collected anyway.
-        missing = sorted({d for (_, d) in per_key} - set(affected))
+        # enforce here: a directory listing.
+        missing = sorted({d for (_, d) in staged} - set(affected))
         if missing:
             shutil.rmtree(staging, ignore_errors=True)
             raise ValueError(
@@ -380,7 +400,7 @@ class RollupStore:
             )
         pointers: dict[str, dict[str, str]] = {}
         lineage = []
-        for tier, day in sorted(per_key):
+        for tier, day in staged:
             src = os.path.join(staging, f"tier={tier}", f"day={day}")
             dst = self._day_dir(tier, day, run_id)
             if os.path.isdir(dst):
@@ -388,27 +408,10 @@ class RollupStore:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(src, dst)
             pointers.setdefault(tier, {})[day] = run_id
-            size = sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(dst)
-                for f in fs
-            )
-            lineage.append(
-                {"tier": tier, "day": day, "rows": per_key[(tier, day)], "bytes": size}
-            )
+            rows, size = _file_stats(_parquet_files(dst))
+            lineage.append({"tier": tier, "day": day, "rows": rows, "bytes": size})
         shutil.rmtree(staging, ignore_errors=True)
         return lineage, pointers
-
-    def merge_tier(
-        self,
-        new_partials: DataFrame,
-        tier: str,
-        run_id: str,
-        affected: list[str] | None = None,
-    ) -> tuple[list[dict], dict[str, str]]:
-        """Single-tier convenience wrapper over `merge_tiers`."""
-        lineage, pointers = self.merge_tiers({tier: new_partials}, run_id, affected)
-        return lineage, pointers.get(tier, {})
 
     def commit_run(
         self,
@@ -458,13 +461,7 @@ class RollupStore:
         return dropped
 
     def _day_files(self, tier: str, day: str, version: str) -> list[str]:
-        d = self._day_dir(tier, day, version)
-        return [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
+        return _parquet_files(self._day_dir(tier, day, version))
 
     def compact_tier(
         self,
@@ -476,9 +473,10 @@ class RollupStore:
         """Small-file compaction of committed day partitions (the Iceberg
         ``rewrite_data_files`` maintenance action).
 
-        Every incremental MERGE writes ~shuffle.partitions files per
-        affected (tier, day) — right for write parallelism, but a
-        low-volume day then carries hundreds of KB-sized files whose
+        A MERGE writes one file per write task holding rows of a
+        (tier, day) — up to the AQE-sized shuffle width, right for write
+        parallelism, but a low-volume day of a wide (multi-day or
+        cluster-scale) merge then carries many KB-sized files whose
         open/footer cost dominates reads at 100 TB. For each committed day
         whose file count exceeds ``slack ×`` the ideal
         ``ceil(bytes / target_bytes)``, this rewrites that day into the
@@ -525,14 +523,13 @@ class RollupStore:
                 .write.mode("overwrite")
                 .parquet(stage_day)
             )
-            rows = self.spark.read.parquet(stage_day).count()
             dst = self._day_dir(tier, day, run_id)
             if os.path.isdir(dst):
                 shutil.rmtree(dst)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(stage_day, dst)
             new_pointers[day] = run_id
-            size = sum(os.path.getsize(f) for f in self._day_files(tier, day, run_id))
+            rows, size = _file_stats(self._day_files(tier, day, run_id))
             lineage.append(
                 {"tier": tier, "day": day, "rows": rows, "bytes": size,
                  "compacted_to_files": want}

@@ -40,7 +40,8 @@ from pyspark.sql.types import (
 )
 
 from tsprofiler_spark.config import Settings
-from tsprofiler_spark.plans.retention import merge_transcript_batch
+from tsprofiler_spark.operators.rollup import TIER_TRUNC
+from tsprofiler_spark.plans.retention import merge_transcript_batch, scan_batch
 from tsprofiler_spark.plans.storage import RollupStore
 
 TRANSCRIPTS_SCHEMA = StructType(
@@ -121,21 +122,16 @@ def process_microbatch(
     resurrected-day machinery (an expired day's next late row recreates a
     flagged partial 1m day). Cheap: a manifest day-list scan + pointer
     commit; no Spark job."""
-    if batch.isEmpty():
-        return []
-    from pyspark.sql import functions as F
-
-    from tsprofiler_spark.plans.retention import format_days, touched_days
-
     run_id = f"{stream_id}-{batch_id}"
     if store.manifest.has_run(run_id):
         return []  # at-least-once replay of a committed batch
     for legacy in legacy_stream_ids:
         if store.manifest.has_run(f"{legacy}-{batch_id}"):
             return []  # replay of a batch committed under the legacy scheme
-    # one scan: watermark + touched day partitions for every tier MERGE
-    wm, affected = batch.agg(F.max("ts"), touched_days()).collect()[0]
-    affected = format_days(affected)
+    # one scan: row count (empty batch: nothing to commit), watermark, days
+    n, wm, affected = scan_batch(batch)
+    if n == 0:
+        return []
     # never move the watermark backwards: a batch of only LATE rows (ts all
     # below the committed watermark) must re-MERGE its tiers but keep the
     # high watermark — lowering it would make a later batch-incremental run
@@ -148,8 +144,6 @@ def process_microbatch(
         batch, store, run_id, watermark, affected=affected
     )
     if tiers_cfg:
-        from tsprofiler_spark.operators.rollup import TIER_TRUNC
-
         for tier, cfg in tiers_cfg.items():
             if tier in TIER_TRUNC:
                 store.expire(tier, cfg["ttl_days"])
@@ -184,6 +178,15 @@ def start_rollup_stream(
     """
     import uuid
 
+    # checked once here: per batch, a malformed dict raised a KeyError only
+    # after that batch's merge had committed
+    for tier, cfg in (tiers_cfg or {}).items():
+        ttl = cfg.get("ttl_days") if isinstance(cfg, dict) else None
+        if tier in TIER_TRUNC and type(ttl) not in (int, float):
+            raise ValueError(
+                f"tiers_cfg[{tier!r}] needs a numeric 'ttl_days' (the shape "
+                f"of config.DEFAULT_TIERS), got {cfg!r}"
+            )
     stream_id = "stream-" + uuid.uuid5(
         uuid.NAMESPACE_URL, os.path.abspath(checkpoint_dir)
     ).hex[:12]
