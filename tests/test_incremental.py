@@ -382,6 +382,54 @@ def test_partial_day_with_coarse_pointers_gone_takes_replace_path(
     assert n_1d == n1 + n2
 
 
+def test_replace_path_clears_stale_partial_flag(spark, transcripts, tmp_path):
+    """A partial-flagged 1m day whose coarse pointers are gone takes the
+    replace path; that commit clears the day's stale `partial` flag, and
+    clearing it changes no tier: every tier holds the day's surviving
+    rows, and the next late batch takes the replace path again."""
+    from tsprofiler_spark.operators.ingest import SERIES_COLS
+    from tsprofiler_spark.plans.retention import _cascade_partials, merge_transcript_batch
+
+    store = RollupStore(spark, str(tmp_path / "s"))
+    incremental_run(
+        transcripts,
+        store,
+        SETTINGS,
+        tiers_cfg={"1m": {"ttl_days": 1}, "1h": {"ttl_days": 365}, "1d": {"ttl_days": 365}},
+        expire=True,
+    )
+    day = sorted(set(store.manifest.tiers["1h"]) - set(store.manifest.tiers["1m"]))[0]
+    day_rows = transcripts.where(F.to_date("ts") == day)
+    lates = [day_rows.where(F.col("turn_idx") % 3 == k).limit(5) for k in range(3)]
+    wm = store.manifest.watermark
+    merge_transcript_batch(lates[0], store, "late-1", wm)
+    store.manifest.drop_days("1h", [day])
+    store.manifest.drop_days("1d", [day])
+    assert day in store.manifest.partial_days("1m")
+
+    merge_transcript_batch(lates[1], store, "late-2", wm)
+    assert day not in store.manifest.partial_days("1m")
+    # durable: the flag is gone from the manifest on disk too
+    assert day not in RollupStore(spark, store.base).manifest.partial_days("1m")
+    merge_transcript_batch(lates[2], store, "late-3", wm)
+    assert day not in store.manifest.partial_days("1m")
+
+    cols = (*SERIES_COLS, "metric", "bucket_start", "n", "s1", "s2", "vmin", "vmax")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    n_late = sum(df.count() for df in lates)
+    one_m = store.read_tier("1m").where(F.col("day") == day).drop("day")
+    assert one_m.agg(F.sum("n")).collect()[0][0] == n_late
+    # each coarse tier is exactly the cascade of the complete 1m day
+    want_1h = _cascade_partials(one_m, "1h")
+    want = {"1h": want_1h, "1d": _cascade_partials(want_1h, "1d")}
+    for tier in ("1h", "1d"):
+        got = store.read_tier(tier).where(F.col("day") == day)
+        assert rows(got) == rows(want[tier]), tier
+
+
 def test_ttl_late_replay_restart_lifecycle(spark, transcripts, tmp_path):
     """One combined lifecycle (r4 verdict ask #5): stream ingest -> 1m TTL
     expiry -> late replay resurrecting an expired day -> stream RESTART

@@ -355,6 +355,25 @@ def test_dedup_components_raises_on_non_convergence(spark):
     assert uf == out
 
 
+def test_dedup_components_plan_stays_flat_across_rounds(spark):
+    """Each propagation round reads the previous labels generation three
+    times; without a lineage cut the plan roughly doubles per round. A
+    6-round call's plan must be no larger than a 2-round call's."""
+    from tsprofiler_spark.operators.dedup import dedup_components
+
+    def plan_nodes(n):
+        # an n-node chain converges in n rounds (n - 1 hops + one quiet round)
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        out = dedup_components(nodes, chain, max_iterations=n, small_graph_edges=0)
+        assert {r.keeper_id for r in out.collect()} == {0}
+        return out._jdf.queryExecution().analyzed().treeString().count("\n")
+
+    assert plan_nodes(6) <= plan_nodes(2)
+
+
 def test_uhash_sql_matches_bigint_affine(spark):
     """The Mersenne-fold SQL expression (uhash_sql) must equal the exact
     big-integer affine map (a*h + b) mod (2^61 - 1) for 60-bit inputs —

@@ -128,9 +128,12 @@ def test_gap_fill_preserves_observed_text(stages, spark):
 
 
 def test_gap_fill_spine_is_dense(stages):
-    spark_stages, _ = stages
-    gf = spark_stages["gap_filled"]
+    _, transcripts = stages
     from pyspark.sql import functions as F
+
+    from tsprofiler_spark.operators.ingest import gap_fill
+
+    gf = gap_fill(transcripts)
 
     per_conv = gf.groupBy("conv_id").agg(
         F.count("*").alias("n"), (F.max("turn_idx") + 1).alias("expected")

@@ -123,6 +123,71 @@ def test_chunk_stage_dir_matches_cached_profile(spark, transcripts_path, tmp_pat
     assert a == b
 
 
+def test_profile_pipeline_builds_no_gap_filled_view_and_no_inference_job(
+    spark, transcripts_path, tmp_path
+):
+    """profile_pipeline returns only the stages the profile reads (the
+    text-carrying gap-filled view is gap_fill's, not a stage), and the
+    staged chunk read-back passes the plan's schema: 5 jobs — the skew
+    gate and the chunk write — where a footer-inferring read-back ran 6."""
+    t = spark.read.parquet(transcripts_path)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "staged-profile")
+    try:
+        stages = profile_pipeline(
+            t, SETTINGS, do_gap_fill=True,
+            chunk_stage_dir=str(tmp_path / "chunk_stage"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("staged-profile")
+    assert 0 < len(jobs) <= 5, jobs
+    assert set(stages) == {
+        "series", "bucketed", "chunks", "states", "counts", "probs", "stats",
+        "profile",
+    }
+
+
+def test_profile_pipeline_rejects_unknown_segment_turns(spark, transcripts_path):
+    t = spark.read.parquet(transcripts_path)
+    with pytest.raises(ValueError, match="segment_turns"):
+        profile_pipeline(t, SETTINGS, segment_turns="segmented")
+
+
+def test_bulk_path_compiles_once_per_session(spark, transcripts_path, tmp_path):
+    """A second incremental_run + staged run_profile in the same session
+    runs no Janino compile: the session's generated-class cache holds the
+    bulk path's working set (at Spark's 100-entry default every class was
+    evicted before its next use and each pass recompiled ~110 classes).
+
+    AQE's runtime broadcast conversion is off for the test: which side of
+    the profile's final join it broadcasts depends on which branch's stage
+    finishes first, and each of the two plans compiles once per session —
+    a variance of the planner, not of the class cache."""
+    from tsprofiler_spark.plans.pipeline import run_profile
+    from tsprofiler_spark.plans.retention import incremental_run
+    from tsprofiler_spark.plans.storage import RollupStore
+
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    t = spark.read.parquet(transcripts_path)
+
+    def bulk_pass(i):
+        store = RollupStore(spark, str(tmp_path / f"store{i}"))
+        incremental_run(t, store, SETTINGS, expire=False)
+        run_profile(
+            t, SETTINGS, do_gap_fill=True, chunk_stage_dir=str(tmp_path / f"chunks{i}")
+        ).write.parquet(str(tmp_path / f"profile{i}"))
+
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    try:
+        bulk_pass(0)
+        compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+        bulk_pass(1)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiles
+
+
 def test_multi_metric_profile_end_to_end(spark, transcripts_path):
     """run_profile(metrics=...) yields one profile row per (series, metric)
     and the len_text slice is value-identical to the single-metric run."""

@@ -469,25 +469,22 @@ def dedup_components(
             .groupBy(edges.dst.alias("doc_id"))
             .agg(F.min("comp").alias("n_comp"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
-        )
-        new_labels.persist()
-        # full count (no limit-short-circuit) so this action also fills the
-        # new_labels cache completely before the old generation is dropped
+        # localCheckpoint (eager) materializes the generation and cuts its
+        # lineage: each round reads the previous labels three times (two
+        # joins and the convergence join), so an uncut generation roughly
+        # doubles the logical plan every round
+        new_labels = labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias(
+                "comp"
+            ),
+        ).localCheckpoint()
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "doc_id")
             .where(F.col("n.comp") != F.col("o.comp"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
@@ -496,17 +493,14 @@ def dedup_components(
         # running out of rounds means some component's labels are still
         # intermediate — silently returning them would split components
         # into multiple "keepers" and dedup incorrectly
-        labels.unpersist()
         raise RuntimeError(
             f"dedup_components did not converge in {max_iterations} rounds: "
             f"{changed} labels still changing — a component's diameter "
             f"exceeds max_iterations; raise it (or use star-contraction at "
             f"this scale)"
         )
-    # NOTE: the returned DataFrame reads from the final persisted labels
-    # generation (unpersisting here would force a full loop-lineage
-    # recompute on first use); callers that run many resolutions in one
-    # session should materialize the result and clear the cache.
+    # the returned DataFrame reads the final checkpointed labels generation;
+    # Spark's context cleaner frees each generation once it is unreferenced
     return _keeper_join(documents, labels)
 
 

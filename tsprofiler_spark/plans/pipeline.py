@@ -17,8 +17,6 @@ from tsprofiler_spark.config import Settings
 from tsprofiler_spark.operators.ingest import (
     derive_multi_series,
     derive_series,
-    gap_fill,
-    gap_fill_segmented,
     gap_fill_series,
     gap_fill_slim,
 )
@@ -79,13 +77,16 @@ def profile_pipeline(
     metrics: tuple[str, ...] | None = None,
     auto_segment_rows: int = SEGMENT_AUTO_ROWS,
 ) -> dict[str, DataFrame]:
-    """Return every intermediate stage keyed by name.
+    """Return the profile's stages keyed by name (``series`` ... ``profile``).
+    Only plans the profile reads are built: the text-carrying gap-filled
+    transcript view is ``operators.ingest.gap_fill``'s, not a stage.
 
     ``segment_turns``: ``"auto"`` (default) runs the measured skew gate
     (`auto_segment_turns`) — the segmented salted path engages only when a
     conversation exceeds ``auto_segment_rows`` rows; an int forces
-    segmentation at that segment size; ``None`` forces the plain path.
-    Value-equality of the two paths is pinned by tests/test_skew.py.
+    segmentation at that segment size; ``None`` forces the plain path; any
+    other string raises ``ValueError``. Value-equality of the two paths is
+    pinned by tests/test_skew.py.
 
     The per-chunk stats table (1/buffer_size the raw row count) feeds BOTH
     the transition branch and the stats branch of the final profile;
@@ -110,6 +111,8 @@ def profile_pipeline(
     """
     if segment_turns == "auto":
         segment_turns = auto_segment_turns(transcripts, auto_segment_rows)
+    elif isinstance(segment_turns, str):
+        raise ValueError(f"segment_turns: 'auto', an int or None, not {segment_turns!r}")
     stages: dict[str, DataFrame] = {}
     t = transcripts
 
@@ -122,18 +125,9 @@ def profile_pipeline(
         return derive_series(df)
 
     if do_gap_fill:
-        # stages["gap_filled"] keeps the full filled-transcript view (text
-        # included) for consumers of the intermediate; the profile's own
-        # series path uses the FUSED slim form — metric expressions computed
-        # at the scan so the gap-fill window's sort shuffles doubles, not
-        # text. Value-equality of the two paths is pinned by
-        # tests/test_gap_fill_slim.py.
-        if segment_turns:
-            stages["gap_filled"] = gap_fill_segmented(
-                transcripts, step_seconds=step_seconds, segment_turns=segment_turns
-            )
-        else:
-            stages["gap_filled"] = gap_fill(transcripts, step_seconds=step_seconds)
+        # FUSED slim gap-fill: metric expressions computed at the scan, so
+        # the gap-fill window's sort shuffles doubles, not text. Equal to
+        # derive_series(gap_fill(t)), pinned by tests/test_gap_fill_slim.py.
         series = gap_fill_series(
             gap_fill_slim(
                 transcripts,
@@ -177,10 +171,11 @@ def profile_pipeline(
         # Cluster-scale pinning: one write job materializes the chunk
         # table as columnar parquet, and both downstream branches re-scan
         # that (compressed, column-pruned) copy instead of a deserialized
-        # executor-heap cache. Heap stays free for the shuffle stages.
+        # executor-heap cache. Heap stays free for the shuffle stages. The
+        # read-back passes the plan's schema, so no footer-inference job runs.
         spark = chunks.sparkSession
         chunks.write.mode("overwrite").parquet(chunk_stage_dir)
-        chunks = spark.read.parquet(chunk_stage_dir)
+        chunks = spark.read.schema(chunks.schema).parquet(chunk_stage_dir)
     elif cache_chunks:
         from pyspark import StorageLevel
 

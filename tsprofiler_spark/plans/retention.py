@@ -211,10 +211,11 @@ def merge_transcript_batch(
     lineage += tier_lineage
     pointers.update(tier_ptrs)
     # the resurrected days' new 1m versions still lack the expired history:
-    # flag them durably IN THE SAME atomic manifest commit
+    # flag them durably IN THE SAME atomic manifest commit; every other
+    # staged 1m day took the replace path (no coarse history left to
+    # preserve), so a flag it still carries is stale and clears
     store.commit_run(
-        run_id, watermark, lineage, pointers,
-        partial_days={"1m": resurrected} if resurrected else None,
+        run_id, watermark, lineage, pointers, partial_days={"1m": resurrected}
     )
     return lineage
 

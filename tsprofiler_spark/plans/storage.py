@@ -90,7 +90,8 @@ class Manifest:
     # from pointer presence alone would see the day committed and take the
     # replace path, rebuilding the 1h/1d day from late rows only and
     # silently destroying the surviving long-TTL rollup. The flag clears
-    # when the day TTL-expires out of the tier again (drop_days).
+    # when the day TTL-expires out of the tier again (drop_days) or a merge
+    # restages it on the replace path (record_run).
     partial: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -145,8 +146,9 @@ class Manifest:
         partial_days: dict[str, list[str]] | None = None,
     ) -> None:
         """Single atomic commit: watermark + lineage + tier snapshot pointers
-        (+ newly-partial day flags, committed in the SAME atomic save so a
-        crash can never publish a resurrected day without its flag)."""
+        (+ `partial` flags: for a tier in ``partial_days`` the listed days
+        are flagged and every other day it points to unflagged, in the SAME
+        atomic save so a crash can never publish a day with a wrong flag)."""
         self.watermark = watermark
         self.runs.append(
             {
@@ -162,8 +164,9 @@ class Manifest:
         for tier, days in (pointers or {}).items():
             self.tiers.setdefault(tier, {}).update(days)
         for tier, days in (partial_days or {}).items():
-            if days:
-                self.partial[tier] = sorted(set(self.partial.get(tier, [])) | set(days))
+            kept = set(self.partial.pop(tier, [])) - set((pointers or {}).get(tier, {}))
+            if kept | set(days):
+                self.partial[tier] = sorted(kept | set(days))
         self._save()
 
     def drop_days(self, tier: str, days: list[str]) -> None:

@@ -85,6 +85,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (static, default 100): one bulk cycle needs
+        # more classes than that, so at the default each was evicted before
+        # its next use and recompiled every cycle (measured: 147 compiles
+        # per perfbench backfill cycle, 0 at this size). 1024 leaves room
+        # for the stream, the entry queries and the tests.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for var, val in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{var}", val)
