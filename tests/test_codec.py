@@ -213,3 +213,77 @@ def test_colocated_compress_matches_shuffle_compress(spark, tmp_path):
         "conv_id", "tool", "role", "metric", "tier",
         F.col("bucket_start").cast("string"), F.round("avg", 9)).collect()))
     assert a == b
+
+
+def test_null_key_segment_is_one_blob_across_batches(spark, tmp_path):
+    """A null segment-key column (a user turn has no ``tool``) is one key,
+    not one per row: pandas' ``None != None`` is True, so the encoder's
+    key-change and carry-tail masks must compare null == null. Small Arrow
+    batches make the null-``tool`` segment span several of them."""
+    import datetime as dt
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from tsprofiler_spark.codec.vectorized import gorilla_encode_many
+    from tsprofiler_spark.config import Settings
+    from tsprofiler_spark.operators.compress import (
+        compress_points,
+        compress_points_colocated,
+        decompress_points,
+    )
+    from tsprofiler_spark.plans.retention import incremental_run
+    from tsprofiler_spark.plans.storage import RollupStore
+    from tsprofiler_spark.streaming.ingest import TRANSCRIPTS_SCHEMA
+
+    base = dt.datetime(2026, 1, 1, 12, 0, 0)
+    rows = [("c1", i, "user", "x" * (i % 7 + 1), None,
+             base + dt.timedelta(minutes=i)) for i in range(20)]
+    rows += [("c1", 20 + i, "assistant", "y" * (i + 1), "search",
+              base + dt.timedelta(minutes=i, seconds=30)) for i in range(12)]
+    store = RollupStore(spark, str(tmp_path / "s"))
+    incremental_run(spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA), store,
+                    Settings(fix_bound=True, fixed_min=0.0, fixed_max=128.0,
+                             states=6),
+                    expire=False)
+    points = store.read_tier("1m").select(
+        "conv_id", "tool", "role", "metric", F.lit("1m").alias("tier"),
+        "bucket_start", F.unix_micros("bucket_start").alias("ts_us"),
+        (F.col("s1") / F.col("n")).alias("avg"),
+    )
+    tier = points.collect()
+    segments: dict = {}
+    for r in sorted(tier, key=lambda r: r.ts_us):
+        key = (r.conv_id, r.tool, r.role, r.metric, r.tier)
+        segments.setdefault(key, ([], []))
+        segments[key][0].append(r.ts_us)
+        segments[key][1].append(r.avg)
+    null_key = ("c1", None, "user", "len_text", "1m")
+    assert len(segments) == 2 and len(segments[null_key][0]) == 20
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    try:
+        for encode in (compress_points_colocated, compress_points):
+            compressed = encode(points.drop("ts_us"))
+            blobs = compressed.collect()
+            keys = [(b.conv_id, b.tool, b.role, b.metric, b.tier) for b in blobs]
+            assert sorted(keys, key=repr) == sorted(segments, key=repr)
+            for b, key in zip(blobs, keys):
+                ts = np.array(segments[key][0], dtype=np.int64)
+                vals = np.array(segments[key][1], dtype=np.float64)
+                assert b.n_points == len(ts)
+                assert bytes(b.ts_dod) == dod_encode(ts)
+                assert bytes(b.points_gorilla) == gorilla_encode_many(
+                    vals, np.array([len(vals)]))[0]
+                np.testing.assert_array_equal(
+                    gorilla_decode(bytes(b.points_gorilla)), vals)
+            back = decompress_points(compressed).select(
+                "conv_id", "tool", "role", "metric", "tier",
+                F.unix_micros("bucket_start"), "avg").collect()
+            assert Counter(map(tuple, back)) == Counter(
+                (r.conv_id, r.tool, r.role, r.metric, r.tier, r.ts_us, r.avg)
+                for r in tier)
+    finally:
+        spark.conf.set(conf, old)

@@ -1,13 +1,10 @@
 """Discretizer parity fixtures ported 1:1 from
 /root/reference/utils/discretize_test.go:9-26."""
 
-import numpy as np
 import pytest
 
 from tsprofiler_spark.kernel.discretize import (
     closest_discretize,
-    closest_discretize_vec,
-    closest_discretize_vec_bounds,
     simple_discretize,
 )
 
@@ -37,21 +34,3 @@ def test_simple_discretize(value, states, vmin, vmax, expected):
 def test_closest_discretize(value, states, vmin, vmax, expected):
     assert closest_discretize(value, states, vmin, vmax) == expected
 
-
-def test_closest_vec_matches_scalar_exhaustively():
-    rng = np.random.default_rng(7)
-    values = np.concatenate(
-        [
-            rng.uniform(-50, 150, 500),
-            np.arange(0, 100, 0.5),  # boundary-ish values
-            np.array([0.0, 100.0, 12.5, 37.5, 62.5, 87.5]),  # exact bounds
-        ]
-    )
-    for states, vmin, vmax in [(4, 0, 100), (10, 0, 100), (7, -20, 80), (3, 5, 5)]:
-        scalar = np.array([closest_discretize(v, states, vmin, vmax) for v in values])
-        vec = closest_discretize_vec(values, states, vmin, vmax)
-        np.testing.assert_array_equal(scalar, vec)
-        vec_b = closest_discretize_vec_bounds(
-            values, states, np.full(len(values), vmin), np.full(len(values), vmax)
-        )
-        np.testing.assert_array_equal(scalar, vec_b)

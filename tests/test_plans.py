@@ -236,3 +236,30 @@ def test_driver_contract_shape():
     assert set(aq) == set(q) | entry._DRIVER_EXCLUDED
     assert set(q).isdisjoint(entry._DRIVER_EXCLUDED)
     assert list(aq)[:50] == entry._DRIVER_ORDER
+
+
+def test_codec_plans_one_exchange_at_most(spark, transcripts_path, tmp_path):
+    """The codec has one encoder. Over a store-read tier (already
+    segment-contiguous and sorted) it plans no exchange; `compress_points`
+    lays out any other input with exactly one hash exchange on the series
+    key, and no groupBy + collect_list."""
+    from tsprofiler_spark.operators.compress import (
+        compress_points,
+        compress_points_colocated,
+    )
+    from tsprofiler_spark.plans.retention import incremental_run
+    from tsprofiler_spark.plans.storage import RollupStore
+
+    store = RollupStore(spark, str(tmp_path / "s"))
+    incremental_run(spark.read.parquet(transcripts_path), store, SETTINGS,
+                    expire=False)
+    points = store.read_tier("1m").select(
+        "conv_id", "tool", "role", "metric", F.lit("1m").alias("tier"),
+        "bucket_start", (F.col("s1") / F.col("n")).alias("avg"),
+    )
+    colocated = _plan(compress_points_colocated(points))
+    assert "Exchange" not in colocated, colocated
+    shuffled = _plan(compress_points(points))
+    assert shuffled.count("Exchange") == 1, shuffled
+    assert shuffled.count("Exchange hashpartitioning") == 1, shuffled
+    assert "collect_list" not in shuffled, shuffled

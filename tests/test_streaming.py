@@ -371,76 +371,6 @@ def test_legacy_stream_run_id_migration_guard(spark, transcripts, tmp_path):
     )
 
 
-def test_watermarked_windowed_rollup(spark, tmp_path):
-    """withWatermark + tumbling window 1m rollup (streaming/windowed.py):
-    finalized buckets must equal the batch 1m tier over the accepted rows;
-    a late row within the watermark is folded in, a row later than the
-    watermark is dropped by state eviction, and a window the watermark
-    never passes is not emitted (append-mode contract)."""
-    import datetime as dt
-
-    from tsprofiler_spark.operators.ingest import derive_series
-    from tsprofiler_spark.operators.rollup import rollup_from_series
-    from tsprofiler_spark.streaming.ingest import TRANSCRIPTS_SCHEMA
-    from tsprofiler_spark.streaming.windowed import (
-        start_windowed_stream,
-        stream_rollup_1m,
-    )
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def row(minute, sec, text, turn):
-        return ("c1", turn, "assistant", text, "search",
-                base + dt.timedelta(minutes=minute, seconds=sec))
-
-    # drop1 (in order): buckets 0,1,2 + an advancer at minute 10
-    # -> watermark after drop1 = 10:00 - 5min = 5:00; buckets 0-2 emit
-    drop1 = [row(0, 5, "aaaa", 0), row(0, 40, "bb", 1), row(1, 10, "cccccc", 2),
-             row(2, 20, "ddd", 3), row(10, 0, "eeeee", 4)]
-    # drop2: late-but-open bucket 9 (end 10:00 > wm 5:00 -> accepted),
-    # too-late bucket 1 (end 2:00 <= wm -> dropped), advancer at minute 20
-    # -> wm = 15:00 closes buckets 9 and 10; bucket 20 never emits
-    drop2 = [row(9, 30, "ff", 5), row(1, 50, "zzzzzzzz", 6), row(20, 0, "gg", 7)]
-
-    inbox = str(tmp_path / "winbox")
-    os.makedirs(inbox)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    out = str(tmp_path / "winout")
-    ckpt = str(tmp_path / "winckpt")
-
-    # two separate availableNow runs against one checkpoint: the watermark
-    # advances and persists between them, so drop2 genuinely arrives "late"
-    for i, drop in enumerate((drop1, drop2)):
-        spark.createDataFrame(drop, cols).coalesce(1).write.parquet(
-            inbox + f"/drop{i + 1}"
-        )
-        stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(inbox + "/*")
-        q = start_windowed_stream(
-            stream_rollup_1m(stream, SETTINGS, watermark_delay="5 minutes"),
-            out, ckpt,
-        )
-        q.awaitTermination(120)
-
-    got = sorted(
-        (str(r.bucket_start), r.n, r.s1, r.s2, r.vmin, r.vmax, r.avg, r.state)
-        for r in spark.read.parquet(out).collect()
-    )
-
-    # batch truth: all rows except the too-late one, buckets <= minute 10
-    accepted = [r for i, r in enumerate(drop1 + drop2) if r[1] not in (6, 7)]
-    batch = rollup_from_series(
-        derive_series(spark.createDataFrame(accepted, cols)), "1m", SETTINGS
-    )
-    want = sorted(
-        (str(r.bucket_start), r.n, r.s1, r.s2, r.vmin, r.vmax, r.avg, r.state)
-        for r in batch.collect()
-    )
-    assert got == want
-    minutes = [b[:19] for b, *_ in got]
-    assert f"{base + dt.timedelta(minutes=20):%Y-%m-%d %H:%M:%S}" not in minutes
-    assert len(got) == 5  # buckets 0,1,2,9,10 (minute-0 rows share a bucket)
-
-
 def test_late_only_batch_never_lowers_watermark(spark, transcripts, tmp_path):
     """A micro-batch of ONLY late rows (all ts below the committed
     watermark) must re-MERGE its tiers but keep the high watermark — a

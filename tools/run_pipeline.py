@@ -63,13 +63,6 @@ def main() -> None:
     ap.add_argument("--skip-profiles", action="store_true")
     ap.add_argument("--skip-compress", action="store_true")
     ap.add_argument(
-        "--compress-shuffle", action="store_true",
-        help="use the generic groupBy+collect_list codec path instead of the "
-        "zero-shuffle colocated streaming encoder (the store's staged files "
-        "are segment-contiguous and sorted, so the default streams segments "
-        "straight off the scan; this flag forces the layout-agnostic path)",
-    )
-    ap.add_argument(
         "--passes", type=int, default=3,
         help="number of full passes; the fastest WARM pass (2..N) is the "
         "measured one. Production is a steady stream of incremental runs on "
@@ -82,11 +75,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from tsprofiler_spark.config import Settings
-    from tsprofiler_spark.operators.compress import (
-        compress_points,
-        compress_points_colocated,
-    )
-    from tsprofiler_spark.operators.ingest import derive_series
+    from tsprofiler_spark.operators.compress import compress_points_colocated
     from tsprofiler_spark.plans.pipeline import run_profile
     from tsprofiler_spark.plans.retention import incremental_run
     from tsprofiler_spark.plans.storage import RollupStore
@@ -171,10 +160,9 @@ def main() -> None:
                 (F.col("s1") / F.col("n")).alias("avg"),
             )
             comp_path = os.path.join(out_dir, "compressed_1m")
-            encoder = (
-                compress_points if args.compress_shuffle else compress_points_colocated
-            )
-            compressed = encoder(points)
+            # the store's staged files are segment-contiguous and sorted, so
+            # the encoder streams segments straight off the scan (no shuffle)
+            compressed = compress_points_colocated(points)
             counters["codec_points"] = timed(
                 "compress",
                 lambda: (

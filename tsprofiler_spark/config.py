@@ -8,7 +8,7 @@ flags (/root/reference/cmd/csv2tsprofile/main.go:19-40).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -51,15 +51,3 @@ DEFAULT_TIERS: dict[str, dict] = {
     "1h": {"trunc": "hour", "ttl_days": 180},
     "1d": {"trunc": "day", "ttl_days": 3650},
 }
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Spark-side execution knobs (explicit per north_rule)."""
-
-    shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 65536
-    salt_buckets: int = 8          # salting factor for hot conv_id keys
-    hot_key_threshold: int = 100_000   # rows per series before salting kicks in
-    files_max_partition_bytes: str = "128m"
-    tiers: dict = field(default_factory=lambda: dict(DEFAULT_TIERS))

@@ -114,8 +114,3 @@ def simple_state_sql(value_expr: str, states: int, vmin: float, vmax: float) -> 
 def series_key_cols() -> list[str]:
     """The series key: one profiled series per (conv_id, tool, role)."""
     return ["conv_id", "tool", "role"]
-
-
-def ident_expr(state_cols: list[Column]) -> Column:
-    """Dash-joined state-history ident (reference: utils/historyconvert.go:10-20)."""
-    return F.concat_ws("-", *[c.cast("string") for c in state_cols])

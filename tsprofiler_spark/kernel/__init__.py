@@ -9,7 +9,6 @@ detection) run *through* them inside `applyInPandas` in parity mode.
 from tsprofiler_spark.kernel.rounding import go_round
 from tsprofiler_spark.kernel.discretize import (
     closest_discretize,
-    closest_discretize_vec,
     simple_discretize,
 )
 from tsprofiler_spark.kernel.txmatrix import (
@@ -28,7 +27,6 @@ __all__ = [
     "go_round",
     "simple_discretize",
     "closest_discretize",
-    "closest_discretize_vec",
     "compute_probabilities",
     "tx_merge",
     "tx_diff",

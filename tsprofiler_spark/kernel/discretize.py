@@ -10,8 +10,6 @@ order is preserved.
 
 from __future__ import annotations
 
-import numpy as np
-
 
 def simple_discretize(value: float, maxstate: int, vmin: float, vmax: float) -> int:
     """Smallest-state discretizer (reference: utils/discretize.go:8-27)."""
@@ -45,48 +43,3 @@ def closest_discretize(value: float, maxstate: int, vmin: float, vmax: float) ->
     if value >= max_upper:
         return maxstate - 1
     return 0
-
-
-def closest_discretize_vec(
-    values: np.ndarray, maxstate: int, vmin: float, vmax: float
-) -> np.ndarray:
-    """Vectorized closest-discretize with the exact scalar bound arithmetic.
-
-    Bounds are materialized with the same ``i*step ± 0.5*step`` float
-    expressions as the scalar loop so results match bit-for-bit.
-    """
-    values = np.asarray(values, dtype=np.float64)
-    step = float(vmax - vmin) / float(maxstate)
-    idx = np.arange(maxstate, dtype=np.float64)
-    lowers = idx * step - 0.5 * step
-    uppers = idx * step + 0.5 * step
-    # (n, S) membership matrix; first matching state wins (argmax on bool)
-    member = (values[:, None] >= lowers[None, :]) & (values[:, None] < uppers[None, :])
-    any_match = member.any(axis=1)
-    first = member.argmax(axis=1)
-    max_upper = float(maxstate - 1) * step + 0.5 * step
-    fallback = np.where(values >= max_upper, maxstate - 1, 0)
-    return np.where(any_match, first, fallback).astype(np.int64)
-
-
-def closest_discretize_vec_bounds(
-    values: np.ndarray,
-    maxstate: int,
-    vmins: np.ndarray,
-    vmaxs: np.ndarray,
-) -> np.ndarray:
-    """Vectorized closest-discretize with per-row (min, max) bounds.
-
-    Used in dynamic-bound mode where every chunk carries its own bounds.
-    """
-    values = np.asarray(values, dtype=np.float64)
-    steps = (np.asarray(vmaxs, dtype=np.float64) - np.asarray(vmins, dtype=np.float64)) / float(maxstate)
-    idx = np.arange(maxstate, dtype=np.float64)
-    lowers = idx[None, :] * steps[:, None] - 0.5 * steps[:, None]
-    uppers = idx[None, :] * steps[:, None] + 0.5 * steps[:, None]
-    member = (values[:, None] >= lowers) & (values[:, None] < uppers)
-    any_match = member.any(axis=1)
-    first = member.argmax(axis=1)
-    max_upper = float(maxstate - 1) * steps + 0.5 * steps
-    fallback = np.where(values >= max_upper, maxstate - 1, 0)
-    return np.where(any_match, first, fallback).astype(np.int64)

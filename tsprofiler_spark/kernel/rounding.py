@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-
 
 def go_round(x: float) -> float:
     """Half-away-from-zero round (reference: utils/stats.go:38-44)."""
@@ -18,10 +16,3 @@ def go_round(x: float) -> float:
     if abs(x - t) >= 0.5:
         return t + math.copysign(1.0, x)
     return float(t)
-
-
-def go_round_vec(x: np.ndarray) -> np.ndarray:
-    """Vectorized `go_round` over a float array."""
-    t = np.trunc(x)
-    bump = (np.abs(x - t) >= 0.5).astype(np.float64) * np.copysign(1.0, x)
-    return t + bump

@@ -18,16 +18,11 @@ from __future__ import annotations
 import numpy as np
 
 from tsprofiler_spark.kernel.rounding import go_round
-from tsprofiler_spark.kernel.stats import TSStats
 
 
 def ident_of(states: list[int]) -> str:
     """States -> "a-b-c" ident (reference: utils/historyconvert.go:10-20)."""
     return "-".join(str(s) for s in states)
-
-
-def states_of(ident: str) -> list[int]:
-    return [int(p) for p in ident.split("-")] if ident else []
 
 
 def compute_probabilities(
@@ -150,7 +145,3 @@ def tx_likeliness_multi(
     # suppress the numpy warning so bench/driver logs stay readable
     with np.errstate(invalid="ignore", divide="ignore"):
         return lsum / np.float32(lcount)
-
-
-def empty_tx(metric: str = "") -> dict:
-    return {"metric": metric, "transitions": {}, "stats": TSStats()}

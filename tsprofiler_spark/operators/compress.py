@@ -2,13 +2,16 @@
 timestamps packed into binary columns, one blob per (series, metric, tier,
 day) segment.
 
-Runs as `applyInPandas` (Arrow-batched, vectorized numpy bit packing — no
-per-row Python against Spark rows). The inverse (`decompress_points`) uses
+One streaming encoder (`compress_points_colocated`) runs as `mapInPandas`
+over segment-contiguous input: Arrow batches, vectorized numpy bit packing,
+no per-row Python against Spark rows. `compress_points` lays out any input
+for it with one shuffle. The inverse (`decompress_points`) is also
 `mapInPandas` and is the basis of the codec round-trip correctness query.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -43,81 +46,50 @@ COMPRESSED_SCHEMA = StructType(
 
 
 def compress_points(tier_df: DataFrame) -> DataFrame:
-    """(series, tier, bucket_start, avg) -> one binary segment per day.
+    """(series, metric, tier, bucket_start, avg) in any order -> one blob per
+    (series, metric, tier, day) segment.
 
-    The group-and-sort runs JVM-side (``groupBy`` + ``array_sort(collect_list
-    (struct(ts, avg)))`` — whole-stage codegen, one shuffle); Python only sees
-    one Arrow batch of many pre-sorted segments via ``mapInPandas`` and walks
-    numpy arrays per segment. This beats a per-group ``applyInPandas`` by
-    ~an order of magnitude at high segment counts: no pandas group-splitting,
-    no per-group DataFrame construction.
+    One exchange hashed on the series key puts every segment in a single
+    partition, and the sort within partitions makes it contiguous and
+    time-ordered: exactly the layout `compress_points_colocated` streams.
     """
-
-    def encode_batches(batches):
-        import numpy as np
-
-        from tsprofiler_spark.codec.vectorized import dod_encode_many, gorilla_encode_many
-
-        for pdf in batches:
-            ts_segs = [
-                np.asarray(a, dtype="datetime64[us]").astype("int64")
-                for a in pdf["ts_arr"]
-            ]
-            val_segs = [np.asarray(a, dtype=np.float64) for a in pdf["val_arr"]]
-            lengths = np.fromiter((len(a) for a in val_segs), dtype=np.int64, count=len(val_segs))
-            ts_cat = np.concatenate(ts_segs) if ts_segs else np.zeros(0, np.int64)
-            val_cat = np.concatenate(val_segs) if val_segs else np.zeros(0, np.float64)
-            # whole-batch vectorized encode: every segment in one numpy pass
-            ts_dod = dod_encode_many(ts_cat, lengths)
-            gor = gorilla_encode_many(val_cat, lengths)
-            out = pdf[["conv_id", "tool", "role", "metric", "tier", "seg_day"]].copy()
-            out["n_points"] = lengths
-            out["ts_dod"] = ts_dod
-            out["points_gorilla"] = gor
-            yield out
-
-    with_day = tier_df.withColumn("seg_day", F.date_trunc("day", "bucket_start"))
-    grouped = with_day.groupBy(*SEGMENT_KEY).agg(
-        F.array_sort(F.collect_list(F.struct("bucket_start", "avg"))).alias("pts")
+    return compress_points_colocated(
+        tier_df.repartition(*SERIES_COLS).sortWithinPartitions(
+            *SERIES_COLS, "metric", "tier", "bucket_start"
+        )
     )
-    flat = grouped.select(
-        *SEGMENT_KEY,
-        F.col("pts.bucket_start").alias("ts_arr"),
-        F.col("pts.avg").alias("val_arr"),
-    )
-    return flat.mapInPandas(encode_batches, COMPRESSED_SCHEMA)
+
+
+def _key_differs(keys: pd.DataFrame, other) -> np.ndarray:
+    """Rows whose segment key differs from ``other`` (a frame or one row),
+    with null equal to null: pandas' ``None != None`` is True, which would
+    start a new segment at every row of a null-``tool`` series."""
+    return ((keys != other) & ~(keys.isna() & other.isna())).any(axis=1).to_numpy()
 
 
 def compress_points_colocated(points: DataFrame) -> DataFrame:
-    """Zero-shuffle twin of `compress_points` for store-colocated tiers.
+    """The codec's one encoder, for input already laid out by segment.
 
-    `RollupStore.merge_tiers` writes every staged file segment-contiguous:
-    one file per (write task, tier, day) so a (series, metric, tier, day)
-    segment never crosses files, locally sorted by segment key +
-    bucket_start. Reading such a tier back therefore gives scan partitions
-    in which every segment's rows are CONTIGUOUS and time-ordered — the
-    groupBy + collect_list exchange in `compress_points` (a full shuffle of
-    every rolled point, the codec stage's only exchange) adds nothing. This
-    variant streams the Arrow batches of each scan partition, slices
-    segments at key-change boundaries (carrying a possibly-split tail
-    segment across batches — O(largest segment) memory), and emits the
-    byte-identical blobs: within a tier the segment key is unique per
-    bucket_start, so sorted-by-ts input yields exactly the arrays
-    `array_sort(collect_list(struct(ts, avg)))` produces.
+    Streams the Arrow batches of each partition, slices segments at
+    key-change boundaries (carrying a possibly-split tail segment across
+    batches — O(largest segment) memory) and encodes every segment of a
+    batch in one vectorized numpy pass.
 
-    Preconditions (both guaranteed by the store layout, pinned in tests):
-    * equal segment keys are contiguous within a scan partition — holds
-      because files are internally sorted and no two files share a segment
-      (disjoint series hash ranges per writer task × one day per dir);
-    * no segment spans scan partitions — staged files are written well
-      under the parquet block size (one row group), and Spark assigns a
-      row group to exactly one split by its midpoint, so even a
-      maxPartitionBytes smaller than the file cannot tear one apart.
+    Preconditions:
+    * equal segment keys are contiguous and time-ordered within a
+      partition;
+    * no segment spans partitions.
+
+    `compress_points` establishes both for any input with one shuffle. A
+    tier read from `RollupStore` already has them, so this runs on it with
+    no exchange: `merge_tiers` writes every staged file sorted by segment
+    key + bucket_start, no two files share a segment (disjoint series hash
+    ranges per writer task x one day per dir), and staged files stay under
+    the parquet block size (one row group), which Spark assigns to exactly
+    one split by its midpoint.
     """
 
     def encode_stream(batches):
-        import numpy as np
-
         from tsprofiler_spark.codec.vectorized import (
             dod_encode_many,
             gorilla_encode_many,
@@ -129,15 +101,12 @@ def compress_points_colocated(points: DataFrame) -> DataFrame:
         def emit(pdf: pd.DataFrame) -> pd.DataFrame:
             ts = pdf["bucket_start"].to_numpy("datetime64[us]").astype("int64")
             vals = pdf["avg"].to_numpy(np.float64)
-            key_codes = (
-                (pdf[key_cols] != pdf[key_cols].shift()).any(axis=1).cumsum()
-            )
-            lengths = key_codes.groupby(key_codes, sort=False).size().to_numpy(
-                np.int64
-            )
-            starts = np.zeros(len(lengths), np.int64)
-            np.cumsum(lengths[:-1], out=starts[1:])
-            out = pdf.iloc[starts][key_cols].reset_index(drop=True)
+            keys = pdf[key_cols]
+            change = _key_differs(keys, keys.shift())
+            change[0] = True
+            starts = np.flatnonzero(change)
+            lengths = np.diff(starts, append=len(pdf))
+            out = keys.iloc[starts].reset_index(drop=True)
             out["n_points"] = lengths
             out["ts_dod"] = dod_encode_many(ts, lengths)
             out["points_gorilla"] = gorilla_encode_many(vals, lengths)
@@ -149,7 +118,8 @@ def compress_points_colocated(points: DataFrame) -> DataFrame:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
             # hold back the final segment: it may continue in the next batch
-            not_last = (pdf[key_cols] != pdf[key_cols].iloc[-1]).any(axis=1).to_numpy()
+            keys = pdf[key_cols]
+            not_last = _key_differs(keys, keys.iloc[-1])
             tail_start = int(not_last.nonzero()[0][-1]) + 1 if not_last.any() else 0
             head, carry = pdf.iloc[:tail_start], pdf.iloc[tail_start:]
             if len(head):
@@ -179,8 +149,6 @@ def decompress_points(compressed: DataFrame) -> DataFrame:
     """Inverse of compress_points (round-trip identity is tested + driver-checked)."""
 
     def decode(batches):
-        import numpy as np
-
         from tsprofiler_spark.codec import dod_decode, gorilla_decode
 
         for pdf in batches:

@@ -1040,9 +1040,12 @@ def _parity_cte() -> str:
     from tsprofiler_spark.functions import closest_state_sql
     from tsprofiler_spark.sources.transcripts import TRANSCRIPTS_FROM_EVENTS_SQL
 
+    ps = _parity_settings()
     return _PARITY_CTE.format(
         ingest=TRANSCRIPTS_FROM_EVENTS_SQL,
-        state_sql=closest_state_sql("chunk_avg", 8, 0.0, 128.0),
+        state_sql=closest_state_sql(
+            "chunk_avg", ps.states, ps.fixed_min, ps.fixed_max
+        ),
         # kernel op order + trunc-compare (txmatrix.py compute_probabilities:
         # go_round((cnt/total)*100.0)); a hand-written FLOOR(100.0*c/r + 0.5)
         # diverges on pairs like 23/40 — see _go_round_pct's docstring
@@ -1321,18 +1324,12 @@ WITH {_parity_cte()},
 # pinned in tests/test_parity_phases.py.
 
 def _q_parity_phases(spark, sf):
-    from tsprofiler_spark.config import Settings
     from tsprofiler_spark.operators.ingest import derive_series
     from tsprofiler_spark.plans.parity import parity_phases
     from tsprofiler_spark.sources.transcripts import transcripts_from_events
 
-    settings = Settings(
-        buffer_size=4, states=8, history=1, fix_bound=True,
-        fixed_min=0.0, fixed_max=128.0, period_size=(4, 6),
-        phase_change_likeliness=0.5, phase_change_history=4,
-    )
     t = transcripts_from_events(spark, sf)
-    return parity_phases(derive_series(t), settings)
+    return parity_phases(derive_series(t), _parity_settings())
 
 
 def _phase_fold_ctes(states: int = 8, hist: int = 4, thresh: str = "0.5") -> str:
@@ -1619,18 +1616,12 @@ WITH RECURSIVE {_parity_cte()},
 
 
 def _q_parity_phase_tx(spark, sf):
-    from tsprofiler_spark.config import Settings
     from tsprofiler_spark.operators.ingest import derive_series
     from tsprofiler_spark.plans.parity import parity_phase_tx
     from tsprofiler_spark.sources.transcripts import transcripts_from_events
 
-    settings = Settings(
-        buffer_size=4, states=8, history=1, fix_bound=True,
-        fixed_min=0.0, fixed_max=128.0, period_size=(4, 6),
-        phase_change_likeliness=0.5, phase_change_history=4,
-    )
     t = transcripts_from_events(spark, sf)
-    return parity_phase_tx(derive_series(t), settings)
+    return parity_phase_tx(derive_series(t), _parity_settings())
 
 
 # The FINAL phase matrices (per-phase integer-percent grids + the growing,

@@ -518,8 +518,9 @@ class RollupStore:
             # SEGMENT-CONTIGUOUS and time-ordered (see the staged-write
             # comment above), and compress_points_colocated's zero-shuffle
             # path depends on that layout — a bare round-robin repartition
-            # here would interleave segments and silently de-optimize every
-            # post-compaction codec run (and worsen parquet delta encoding)
+            # here would interleave segments and split them into several
+            # blobs on every post-compaction codec run (and worsen parquet
+            # delta encoding)
             (
                 df.repartition(want, *SERIES_COLS)
                 .sortWithinPartitions(*SERIES_COLS, "metric", "bucket_start")
