@@ -108,3 +108,35 @@ def test_plot_roottx_on_reference_fixture(tmp_path):
     # matrix extraction quirk: missing from-state idents -> all-zero row
     rows = mod.tx_matrix({"1": {"nextProbs": [5, 95]}}, 2)
     assert rows == [[0, 0], [5, 95]]
+
+
+def test_evlog_analyze_reads_rolling_zstd_log(tmp_path, capsys):
+    """Spark 4's default event log is a rolling directory of zstd files:
+    read in index order (9 before 10), it gives the totals of the same
+    events in one uncompressed file."""
+    import pyarrow as pa
+
+    mod = _load("evlog_analyze")
+    events = []
+    for job, (sub, done) in enumerate([(1000, 3000), (4500, 5000)]):
+        events.append({"Event": "SparkListenerJobStart", "Job ID": job,
+                       "Submission Time": sub, "Properties": {}})
+        events.append({"Event": "SparkListenerTaskEnd", "Stage ID": job,
+                       "Task Info": {"Launch Time": sub, "Finish Time": done}})
+        events.append({"Event": "SparkListenerJobEnd", "Job ID": job,
+                       "Completion Time": done})
+    lines = [json.dumps(e) + "\n" for e in events]
+    plain = tmp_path / "events.json"
+    plain.write_text("".join(lines))
+    rolling = tmp_path / "eventlog_v2_app-1"
+    rolling.mkdir()
+    (rolling / "appstatus_app-1").write_text("")
+    for index, part in ((9, lines[:4]), (10, lines[4:])):
+        with pa.output_stream(str(rolling / f"events_{index}_app-1.zstd"),
+                              compression="zstd") as out:
+            out.write("".join(part).encode())
+
+    want = mod.main(str(plain))
+    assert want == {"jobs": 2, "job_s": 2.5, "gap_s": 1.5}
+    assert mod.main(str(rolling)) == want
+    assert "sum(gaps)=1.5s" in capsys.readouterr().out

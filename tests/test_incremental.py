@@ -91,8 +91,8 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     single-run result — no double counts, no orphan visibility."""
     from pyspark.sql import functions as F
 
+    from tsprofiler_spark.operators.rollup import tier_partials
     from tsprofiler_spark.plans.retention import (
-        _tier_partials,
         merge_transcript_batch,
         touched_days,
     )
@@ -106,7 +106,7 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     # batch will use, then stop — nothing committed
     run_id = "stream-7"
     _lin, ptrs = store.merge_tiers(
-        {"1m": _tier_partials(derive_series(transcripts), "1m")},
+        {"1m": tier_partials(derive_series(transcripts), "1m")},
         run_id, affected=affected,
     )
     assert store.read_tier("1m") is None  # staged versions are invisible
@@ -191,18 +191,63 @@ def test_merge_tiers_rejects_staged_day_outside_affected(spark, transcripts, tmp
     outside it never had its committed rows unioned in, so committing it
     would drop them. The MERGE raises and leaves nothing staged."""
     from tsprofiler_spark.operators.ingest import derive_series
-    from tsprofiler_spark.plans.retention import _tier_partials, scan_batch
+    from tsprofiler_spark.operators.rollup import tier_partials
+    from tsprofiler_spark.plans.retention import scan_batch
 
     store = RollupStore(spark, str(tmp_path / "g"))
     days = scan_batch(transcripts)[2]
     assert len(days) >= 2, "fixture must span multiple days"
     with pytest.raises(ValueError, match="not covered by affected"):
         store.merge_tiers(
-            {"1m": _tier_partials(derive_series(transcripts), "1m")},
+            {"1m": tier_partials(derive_series(transcripts), "1m")},
             "guard-1", affected=days[1:],
         )
     assert not os.path.exists(os.path.join(store.base, "_staging-guard-1"))
     assert store.read_tier("1m") is None
+
+
+def test_merged_days_keep_one_blob_per_segment(spark, transcripts, tmp_path):
+    """Late rows merged into committed days leave every tier's segments
+    whole: each (series, metric, tier, day) segment lies in one staged file,
+    so the no-shuffle codec encoder emits exactly one blob per segment key,
+    as many as compress_points. With AQE coalescing off, 8 shuffle
+    partitions stand in for a day larger than one advisory partition."""
+    from tsprofiler_spark.operators.compress import (
+        SEGMENT_KEY,
+        compress_points,
+        compress_points_colocated,
+    )
+    from tsprofiler_spark.plans.retention import merge_transcript_batch
+
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        store = RollupStore(spark, str(tmp_path / "s"))
+        incremental_run(
+            transcripts.where(F.col("turn_idx") % 2 == 0), store, SETTINGS,
+            expire=False,
+        )
+        late = transcripts.where(F.col("turn_idx") % 2 == 1)
+        merge_transcript_batch(late, store, "late-1", store.manifest.watermark)
+        for tier in ("1m", "1h", "1d"):
+            points = store.read_tier(tier).select(
+                "conv_id", "tool", "role", "metric", F.lit(tier).alias("tier"),
+                "bucket_start", (F.col("s1") / F.col("n")).alias("avg"),
+            )
+            keys = [
+                tuple(r)
+                for r in compress_points_colocated(points).select(*SEGMENT_KEY).collect()
+            ]
+            assert len(keys) == len(set(keys)), tier
+            assert len(keys) == compress_points(points).count(), tier
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_read_tier_day_range_prunes_paths(spark, transcripts, tmp_path):
@@ -388,7 +433,8 @@ def test_replace_path_clears_stale_partial_flag(spark, transcripts, tmp_path):
     clearing it changes no tier: every tier holds the day's surviving
     rows, and the next late batch takes the replace path again."""
     from tsprofiler_spark.operators.ingest import SERIES_COLS
-    from tsprofiler_spark.plans.retention import _cascade_partials, merge_transcript_batch
+    from tsprofiler_spark.operators.rollup import cascade_partials
+    from tsprofiler_spark.plans.retention import merge_transcript_batch
 
     store = RollupStore(spark, str(tmp_path / "s"))
     incremental_run(
@@ -423,8 +469,8 @@ def test_replace_path_clears_stale_partial_flag(spark, transcripts, tmp_path):
     one_m = store.read_tier("1m").where(F.col("day") == day).drop("day")
     assert one_m.agg(F.sum("n")).collect()[0][0] == n_late
     # each coarse tier is exactly the cascade of the complete 1m day
-    want_1h = _cascade_partials(one_m, "1h")
-    want = {"1h": want_1h, "1d": _cascade_partials(want_1h, "1d")}
+    want_1h = cascade_partials(one_m, "1h")
+    want = {"1h": want_1h, "1d": cascade_partials(want_1h, "1d")}
     for tier in ("1h", "1d"):
         got = store.read_tier(tier).where(F.col("day") == day)
         assert rows(got) == rows(want[tier]), tier

@@ -78,8 +78,9 @@ def test_tiers_bootstrap_single_exchange(spark, transcripts_path):
     """The finest-tier stage shuffles the raw series exactly ONCE: the
     explicit series-key repartition in merge_transcript_batch satisfies the
     1m groupBy's clustering (subset of its keys), so EnsureRequirements
-    inserts no aggregation exchange, and merge_tiers(distribute=False)
-    writes straight from the aggregation output. Pinned so a refactor can't
+    inserts no aggregation exchange, and merge_tiers (which adds no shuffle
+    of its own: every plan reaching it is series-key distributed) writes
+    straight from the aggregation output. Pinned so a refactor can't
     silently reintroduce the second full-size shuffle."""
     from tsprofiler_spark.plans.retention import _finest_partials
 

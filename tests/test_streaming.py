@@ -444,7 +444,7 @@ def test_late_microbatch_job_budget(spark, transcripts, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("late-microbatch")
-    assert lineage and 0 < len(jobs) <= 9, jobs
+    assert lineage and 0 < len(jobs) <= 8, jobs
 
     run_id = store.manifest.runs[-1]["run_id"]
     coarse_files = [
@@ -479,9 +479,13 @@ def test_empty_microbatch_commits_nothing(spark, transcripts, tmp_path):
         {"1m": {"ttl_days": 30}, "1h": None},
     ],
 )
-def test_start_rollup_stream_rejects_malformed_tiers_cfg(spark, tmp_path, tiers_cfg):
-    """A malformed tiers_cfg fails at the call, before the query starts —
-    not with a KeyError inside foreachBatch after a merge has committed."""
+def test_start_rollup_stream_rejects_malformed_tiers_cfg(
+    spark, transcripts, tmp_path, tiers_cfg
+):
+    """A malformed tiers_cfg fails at the call, before anything runs — not
+    with a KeyError from the expiry after a merge has committed: the stream
+    never starts, and a batch run or a directly driven micro-batch commits
+    nothing."""
     inbox = str(tmp_path / "inbox")
     os.makedirs(inbox)
     ckpt = str(tmp_path / "ckpt")
@@ -493,3 +497,27 @@ def test_start_rollup_stream_rejects_malformed_tiers_cfg(spark, tmp_path, tiers_
         )
     assert not os.path.exists(ckpt)
     assert not spark.streams.active
+
+    with pytest.raises(ValueError, match="ttl_days"):
+        incremental_run(transcripts, store, SETTINGS, tiers_cfg=tiers_cfg)
+    with pytest.raises(ValueError, match="ttl_days"):
+        process_microbatch(transcripts, 0, store, tiers_cfg=tiers_cfg)
+    for m in (store.manifest, RollupStore(spark, store.base).manifest):
+        assert m.runs == []
+    assert not os.path.exists(store.base) or not [
+        d for d in os.listdir(store.base) if d.startswith("tier=")
+    ]
+
+
+def test_stream_chunk_states_rejects_dynamic_bounds(spark, tmp_path):
+    """Streaming chunking discretizes against fixed bounds only: without
+    fix_bound it raises at the call (a real check, not an `assert` that
+    ``python -O`` strips)."""
+    from tsprofiler_spark.operators.ingest import derive_series
+    from tsprofiler_spark.streaming.profile_stream import stream_chunk_states
+
+    inbox = str(tmp_path / "inbox")
+    os.makedirs(inbox)
+    series = derive_series(stream_transcripts(spark, inbox))
+    with pytest.raises(ValueError, match="fix_bound"):
+        stream_chunk_states(series, Settings(fix_bound=False))

@@ -3,55 +3,76 @@
 driver-side gaps between jobs (time no job is running = non-scaling serial
 time), and per-stage core utilization (sum of task run time / (wall x
 slots)). Used to locate the non-scaling component that caps N->4N scaling
-efficiency in the retention pipeline."""
+efficiency in the retention pipeline.
+
+Reads a plain JSON-lines log, a ``.zstd``-compressed one, or Spark 4's
+default rolling ``eventlog_v2_*`` directory of ``events_<N>_*`` files."""
 
 from __future__ import annotations
 
+import io
 import json
+import os
 import sys
 from collections import defaultdict
 
+import pyarrow as pa
 
-def main(path: str, slots: int = 8) -> None:
+
+def read_events(path: str):
+    """Yield the events of a log file or of a rolling log directory (its
+    ``events_<N>_*`` files in index order)."""
+    paths = [path]
+    if os.path.isdir(path):
+        names = [f for f in os.listdir(path) if f.startswith("events_")]
+        names.sort(key=lambda f: int(f.split("_")[1]))
+        paths = [os.path.join(path, f) for f in names]
+    for p in paths:
+        raw = pa.input_stream(p, compression="zstd" if p.endswith(".zstd") else None)
+        with io.TextIOWrapper(raw, encoding="utf-8", errors="replace") as f:
+            for line in f:
+                try:
+                    yield json.loads(line)
+                except json.JSONDecodeError:
+                    continue  # a truncated last line of a log still being written
+
+
+def main(path: str, slots: int = 8) -> dict:
+    """Print the report; return the job count and job/gap second totals."""
     jobs = {}            # id -> [t_sub, t_done, desc]
     stage_task_ms = defaultdict(float)
     stage_name = {}
     stage_wall = {}      # sid -> [min launch, max finish]
     stage_ntasks = defaultdict(int)
-    with open(path) as f:
-        for line in f:
-            try:
-                e = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            ev = e.get("Event")
-            if ev == "SparkListenerJobStart":
-                jobs[e["Job ID"]] = [
-                    e["Submission Time"], None,
-                    (e.get("Properties") or {}).get(
-                        "spark.job.description", "")[:90],
-                ]
-            elif ev == "SparkListenerJobEnd":
-                if e["Job ID"] in jobs:
-                    jobs[e["Job ID"]][1] = e["Completion Time"]
-            elif ev == "SparkListenerTaskEnd":
-                sid = e["Stage ID"]
-                info = e.get("Task Info", {})
-                stage_task_ms[sid] += info.get("Finish Time", 0) - info.get(
-                    "Launch Time", 0)
-                stage_ntasks[sid] += 1
-                w = stage_wall.setdefault(sid, [1 << 60, 0])
-                w[0] = min(w[0], info.get("Launch Time", 1 << 60))
-                w[1] = max(w[1], info.get("Finish Time", 0))
-            elif ev == "SparkListenerStageCompleted":
-                si = e["Stage Info"]
-                stage_name[si["Stage ID"]] = si.get("Stage Name", "")[:70]
+    for e in read_events(path):
+        ev = e.get("Event")
+        if ev == "SparkListenerJobStart":
+            jobs[e["Job ID"]] = [
+                e["Submission Time"], None,
+                (e.get("Properties") or {}).get(
+                    "spark.job.description", "")[:90],
+            ]
+        elif ev == "SparkListenerJobEnd":
+            if e["Job ID"] in jobs:
+                jobs[e["Job ID"]][1] = e["Completion Time"]
+        elif ev == "SparkListenerTaskEnd":
+            sid = e["Stage ID"]
+            info = e.get("Task Info", {})
+            stage_task_ms[sid] += info.get("Finish Time", 0) - info.get(
+                "Launch Time", 0)
+            stage_ntasks[sid] += 1
+            w = stage_wall.setdefault(sid, [1 << 60, 0])
+            w[0] = min(w[0], info.get("Launch Time", 1 << 60))
+            w[1] = max(w[1], info.get("Finish Time", 0))
+        elif ev == "SparkListenerStageCompleted":
+            si = e["Stage Info"]
+            stage_name[si["Stage ID"]] = si.get("Stage Name", "")[:70]
 
     done = sorted(
         (v for v in jobs.values() if v[1]), key=lambda v: v[0])
     if not done:
         print("no completed jobs")
-        return
+        return {"jobs": 0, "job_s": 0.0, "gap_s": 0.0}
     t0 = done[0][0]
     prev_end = None
     total_gap = total_job = 0.0
@@ -79,6 +100,7 @@ def main(path: str, slots: int = 8) -> None:
         print(f"stage {sid:4d} tasks={stage_ntasks[sid]:4d} "
               f"task_sum={tms/1e3:8.1f}s wall={wall:7.1f}s util={util:4.2f} "
               f" {stage_name.get(sid, '')}")
+    return {"jobs": len(done), "job_s": total_job, "gap_s": total_gap}
 
 
 if __name__ == "__main__":

@@ -42,12 +42,12 @@ class Settings:
         }
 
 
-# Retention tier definitions: tier name -> (truncation unit, TTL days).
-# TTLs are relative to the table's high watermark ts (north_rule: cascading
-# raw -> 1m -> 1h -> 1d downsamples with TTL-driven expiry).
+# Retention tier definitions: tier name -> TTL days, relative to the table's
+# high watermark ts (north_rule: cascading raw -> 1m -> 1h -> 1d downsamples
+# with TTL-driven expiry). Truncation units: operators/rollup.py TIER_TRUNC.
 DEFAULT_TIERS: dict[str, dict] = {
-    "raw": {"trunc": None, "ttl_days": 7},
-    "1m": {"trunc": "minute", "ttl_days": 30},
-    "1h": {"trunc": "hour", "ttl_days": 180},
-    "1d": {"trunc": "day", "ttl_days": 3650},
+    "raw": {"ttl_days": 7},
+    "1m": {"ttl_days": 30},
+    "1h": {"ttl_days": 180},
+    "1d": {"ttl_days": 3650},
 }

@@ -81,12 +81,13 @@ def compress_points_colocated(points: DataFrame) -> DataFrame:
     * no segment spans partitions.
 
     `compress_points` establishes both for any input with one shuffle. A
-    tier read from `RollupStore` already has them, so this runs on it with
-    no exchange: `merge_tiers` writes every staged file sorted by segment
-    key + bucket_start, no two files share a segment (disjoint series hash
-    ranges per writer task x one day per dir), and staged files stay under
-    the parquet block size (one row group), which Spark assigns to exactly
-    one split by its midpoint.
+    tier read from `RollupStore` already has them, whichever path wrote it
+    (bootstrap, merge into committed days, compaction), so this runs on it
+    with no exchange: every write sorts each file by segment key +
+    bucket_start, no two files share a segment (disjoint series hash ranges
+    per writer task x one day per dir), and staged files stay under the
+    parquet block size (one row group), which Spark assigns to exactly one
+    split by its midpoint.
     """
 
     def encode_stream(batches):

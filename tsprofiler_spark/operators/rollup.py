@@ -20,39 +20,57 @@ from tsprofiler_spark.operators.ingest import SERIES_COLS
 TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
 # cascade order: each tier is computed from the previous (finer) one
 CASCADE = ["1m", "1h", "1d"]
+# the distributive partials every tier bucket carries
+PARTIALS = ["n", "s1", "s2", "vmin", "vmax"]
 
 
-def rollup_from_series(series: DataFrame, tier: str, settings: Settings) -> DataFrame:
-    """raw observations -> finest time tier (one shuffle on the series key)."""
-    trunc = TIER_TRUNC[tier]
-    g = series.groupBy(
-        *SERIES_COLS, "metric", F.date_trunc(trunc, "ts").alias("bucket_start")
+def tier_partials(series: DataFrame, tier: str) -> DataFrame:
+    """raw observations -> tier partials, one row per (series, metric,
+    bucket_start)."""
+    value = F.col("value")
+    return series.groupBy(
+        *SERIES_COLS, "metric", F.date_trunc(TIER_TRUNC[tier], "ts").alias("bucket_start")
     ).agg(
-        F.count("value").alias("n"),
-        F.sum("value").alias("s1"),
-        F.sum(F.col("value") * F.col("value")).alias("s2"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
+        F.count(value).alias("n"),
+        F.sum(value).alias("s1"),
+        F.sum(value * value).alias("s2"),
+        F.min(value).alias("vmin"),
+        F.max(value).alias("vmax"),
     )
-    return _finish_tier(g, tier, settings)
 
 
-def rollup_cascade(finer: DataFrame, tier: str, settings: Settings) -> DataFrame:
-    """finer tier partials -> coarser tier (never rescans raw; exact for the
-    distributive partials)."""
-    trunc = TIER_TRUNC[tier]
-    g = finer.groupBy(
-        *SERIES_COLS,
-        "metric",
-        F.date_trunc(trunc, "bucket_start").alias("bucket_start"),
-    ).agg(
+def fold_partials(partials: DataFrame, *keys) -> DataFrame:
+    """Combine partials per ``keys``: n/s1/s2 sum, vmin min, vmax max —
+    associative and commutative, so any split of the input folds to the
+    same result."""
+    return partials.groupBy(*keys).agg(
         F.sum("n").alias("n"),
         F.sum("s1").alias("s1"),
         F.sum("s2").alias("s2"),
         F.min("vmin").alias("vmin"),
         F.max("vmax").alias("vmax"),
     )
-    return _finish_tier(g, tier, settings)
+
+
+def cascade_partials(finer: DataFrame, tier: str) -> DataFrame:
+    """finer tier partials -> coarser tier partials (never rescans raw;
+    exact for the distributive partials)."""
+    return fold_partials(
+        finer,
+        *SERIES_COLS,
+        "metric",
+        F.date_trunc(TIER_TRUNC[tier], "bucket_start").alias("bucket_start"),
+    )
+
+
+def rollup_from_series(series: DataFrame, tier: str, settings: Settings) -> DataFrame:
+    """raw observations -> finest time tier (one shuffle on the series key)."""
+    return _finish_tier(tier_partials(series, tier), tier, settings)
+
+
+def rollup_cascade(finer: DataFrame, tier: str, settings: Settings) -> DataFrame:
+    """finer tier -> coarser tier."""
+    return _finish_tier(cascade_partials(finer, tier), tier, settings)
 
 
 def _finish_tier(g: DataFrame, tier: str, settings: Settings) -> DataFrame:
@@ -65,11 +83,7 @@ def _finish_tier(g: DataFrame, tier: str, settings: Settings) -> DataFrame:
         "metric",
         F.lit(tier).alias("tier"),
         "bucket_start",
-        "n",
-        "s1",
-        "s2",
-        "vmin",
-        "vmax",
+        *PARTIALS,
         avg.alias("avg"),
         stddev.alias("stddev"),
         closest_state(avg, settings.states, settings.fixed_min, settings.fixed_max).alias(

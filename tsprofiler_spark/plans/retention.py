@@ -17,42 +17,38 @@ from pyspark.sql import functions as F
 
 from tsprofiler_spark.config import DEFAULT_TIERS, Settings
 from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
-from tsprofiler_spark.operators.rollup import TIER_TRUNC
+from tsprofiler_spark.operators.rollup import (
+    TIER_TRUNC,
+    cascade_partials,
+    tier_partials,
+)
 from tsprofiler_spark.plans.storage import RollupStore
 
 
-def _tier_partials(series: DataFrame, tier: str) -> DataFrame:
-    trunc = TIER_TRUNC[tier]
-    return series.groupBy(
-        *SERIES_COLS, "metric", F.date_trunc(trunc, "ts").alias("bucket_start")
-    ).agg(
-        F.count("value").alias("n"),
-        F.sum("value").alias("s1"),
-        F.sum(F.col("value") * F.col("value")).alias("s2"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-    )
+def tier_ttls(tiers_cfg: dict | None) -> dict[str, float]:
+    """{tier: ttl_days} of the rollup tiers in ``tiers_cfg`` (the shape of
+    config.DEFAULT_TIERS; ``None`` means no expiry). Entry points call it
+    BEFORE merging: a malformed entry then raises ValueError with nothing
+    committed, instead of a KeyError from the expiry after the commit."""
+    ttls = {}
+    for tier, cfg in (tiers_cfg or {}).items():
+        if tier not in TIER_TRUNC:
+            continue  # "raw" has no rollup tier to expire
+        ttl = cfg.get("ttl_days") if isinstance(cfg, dict) else None
+        if type(ttl) not in (int, float):
+            raise ValueError(
+                f"tiers_cfg[{tier!r}] needs a numeric 'ttl_days' (the shape "
+                f"of config.DEFAULT_TIERS), got {cfg!r}"
+            )
+        ttls[tier] = ttl
+    return ttls
 
 
 def _finest_partials(transcripts: DataFrame) -> DataFrame:
     """1m partials behind ONE series-key shuffle with no fixed partition
     count: AQE coalesces it for a small batch (see merge_transcript_batch)."""
     series = derive_series(transcripts).repartition(*SERIES_COLS)
-    return _tier_partials(series, "1m")
-
-
-def _cascade_partials(finer: DataFrame, tier: str) -> DataFrame:
-    trunc = TIER_TRUNC[tier]
-    return finer.groupBy(
-        *SERIES_COLS, "metric",
-        F.date_trunc(trunc, "bucket_start").alias("bucket_start"),
-    ).agg(
-        F.sum("n").alias("n"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-    )
+    return tier_partials(series, "1m")
 
 
 def touched_days() -> F.Column:
@@ -105,18 +101,14 @@ def merge_transcript_batch(
         return []  # replayed micro-batch / re-run — already committed
     if affected is None:
         affected = scan_batch(transcripts)[2]
-    # ONE exchange for the whole finest-tier stage: hash-distribute the raw
-    # series rows by the series key ONCE. The 1m groupBy clusters on a
-    # SUPERSET of (series cols), so hash partitioning on the subset already
-    # satisfies its required distribution (EnsureRequirements inserts no
-    # second exchange), and the staged write below runs straight from the
-    # aggregation output (merge_tiers distribute=False). The previous shape
-    # shuffled the same ~raw-sized row count twice — partials aggregation,
-    # then a write repartition — and at minute granularity the map-side
-    # combine saved almost nothing (every turn is its own bucket), so this
-    # halves the stage's exchange volume outright. Bonus: staged files are
-    # conversation-colocated, which is what lets the 1h cascade's map-side
-    # combine collapse 60:1 before its (tiny) shuffle.
+    # ONE exchange for the whole finest-tier stage: the raw series rows are
+    # hash-distributed by the series key ONCE. The 1m groupBy clusters on a
+    # SUPERSET of the series cols, so EnsureRequirements inserts no second
+    # exchange, and the staged write runs straight from the aggregation
+    # output (merge_tiers' layout rule) — at minute granularity a map-side
+    # combine would save almost nothing (every turn is its own bucket).
+    # Staged files are conversation-colocated, which lets the 1h cascade's
+    # map-side combine collapse 60:1 before its (tiny) shuffle.
     #
     # Skew note: one task now owns a whole conversation-series — the same
     # per-conv concentration every gap-fill/bucketize window in the engine
@@ -131,9 +123,7 @@ def merge_transcript_batch(
     # rows in the executor heap instead measurably throttles the N-executor
     # configuration (spill + GC) without saving any scan of the raw data.
     finest = _finest_partials(transcripts)
-    lineage, pointers = store.merge_tiers(
-        {"1m": finest}, run_id, affected=affected, distribute=False
-    )
+    lineage, pointers = store.merge_tiers({"1m": finest}, run_id, affected=affected)
     staged_1m = store.read_versions("1m", pointers["1m"])
     # Days whose 1m content is INCOMPLETE (TTL-resurrected): a late row for
     # a day already expired out of 1m (tier TTLs differ — 1m 30d vs 1h 180d
@@ -190,22 +180,22 @@ def merge_transcript_batch(
         cascade_src = staged_1m.drop("day")
     # 1d cascades from the 1h partials (not from 1m): sums/min/max compose,
     # and the 1h->1d re-aggregation reads 60x fewer rows. No cache: both
-    # tiers land in ONE write, whose plan holds the 1h aggregation's
-    # exchange twice — Spark reuses it, so the 1m files are scanned once.
-    coarse_1h = _cascade_partials(cascade_src, "1h")
-    coarse_1d = _cascade_partials(coarse_1h, "1d")
-    # replace=True: for non-resurrected days the cascade source is the
-    # staged 1m day's COMPLETE merged content, so the cascaded 1h/1d
-    # partials are full day replacements — no union with the existing
-    # 1h/1d needed (and unioning would double-count exactly the
-    # previously merged data). Resurrected days keep merge semantics
-    # (``merge_days``): their cascaded increment folds ADDITIVELY into
-    # the existing 1h/1d day, preserving the long-TTL rollup.
+    # tiers land in ONE write, whose plan holds the 1h series-key exchange
+    # twice — Spark reuses it, so the 1m files are scanned once. That
+    # exchange is the write's layout (see merge_tiers): the 1d fold and any
+    # merged-day union cluster on a superset of the series key.
+    coarse_1h = cascade_partials(cascade_src, "1h").repartition(*SERIES_COLS)
+    coarse_1d = cascade_partials(coarse_1h, "1d")
+    # Only the resurrected days merge: their cascaded increment folds
+    # ADDITIVELY into the existing 1h/1d day, preserving the long-TTL
+    # rollup. Every other day's cascade source is the staged 1m day's
+    # COMPLETE merged content, so its 1h/1d partials replace the day —
+    # folding them into the existing 1h/1d would double-count exactly the
+    # previously merged data.
     tier_lineage, tier_ptrs = store.merge_tiers(
         {"1h": coarse_1h, "1d": coarse_1d},
         run_id,
         affected=affected,
-        replace=True,
         merge_days=resurrected,
     )
     lineage += tier_lineage
@@ -228,7 +218,7 @@ def incremental_run(
     expire: bool = True,
 ) -> dict:
     """One resumable incremental run. Returns run stats."""
-    tiers_cfg = tiers_cfg or DEFAULT_TIERS
+    ttls = tier_ttls(tiers_cfg or DEFAULT_TIERS)
 
     wm = store.manifest.watermark
     new = transcripts
@@ -249,8 +239,7 @@ def incremental_run(
     )
 
     if expire:
-        for tier, cfg in tiers_cfg.items():
-            if tier in TIER_TRUNC:
-                store.expire(tier, cfg["ttl_days"])
+        for tier, ttl in ttls.items():
+            store.expire(tier, ttl)
 
     return {"run_id": run_id, "new_rows": n_new, "partitions": lineage}

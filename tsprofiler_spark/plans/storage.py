@@ -36,9 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsprofiler_spark.operators.ingest import SERIES_COLS
+from tsprofiler_spark.operators.rollup import PARTIALS, fold_partials
 
 TIER_KEY = SERIES_COLS + ["metric", "bucket_start"]
-PARTIALS = ["n", "s1", "s2", "vmin", "vmax"]
 # Data columns of every tier file. Reads pass it explicitly: inferring it
 # from parquet footers costs one Spark job per read.
 TIER_SCHEMA = ", ".join(
@@ -57,16 +57,9 @@ def _parquet_files(path: str) -> list[str]:
     ]
 
 
-def _file_stats(files: list[str]) -> tuple[int, int]:
-    """(rows, bytes) of parquet files; rows come from the footers, so
-    counting them costs no Spark job."""
-    return (
-        sum(pq.read_metadata(f).num_rows for f in files),
-        sum(os.path.getsize(f) for f in files),
-    )
-
-
 LINEAGE_KEEP = 256  # full per-day lineage kept for the most recent N runs
+# the manifest's persisted fields, in file order
+_STATE = ("watermark", "runs", "tiers", "compacted_run_ids", "partial")
 
 
 @dataclass
@@ -103,14 +96,7 @@ class Manifest:
         if os.path.exists(path):
             with open(path) as f:
                 d = json.load(f)
-            return Manifest(
-                path=path,
-                watermark=d.get("watermark"),
-                runs=d.get("runs", []),
-                tiers=d.get("tiers", {}),
-                compacted_run_ids=d.get("compacted_run_ids", []),
-                partial=d.get("partial", {}),
-            )
+            return Manifest(path=path, **{k: d[k] for k in _STATE if k in d})
         return Manifest(path=path)
 
     def has_run(self, run_id: str) -> bool:
@@ -124,17 +110,7 @@ class Manifest:
         tmp = self.path + ".tmp"
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "watermark": self.watermark,
-                    "runs": self.runs,
-                    "tiers": self.tiers,
-                    "compacted_run_ids": self.compacted_run_ids,
-                    "partial": self.partial,
-                },
-                f,
-                indent=1,
-            )
+            json.dump({k: getattr(self, k) for k in _STATE}, f, indent=1)
         os.replace(tmp, self.path)  # THE atomic commit point
 
     def record_run(
@@ -238,67 +214,53 @@ class RollupStore:
         return self.read_versions(tier, pointers)
 
     def _merged_tier_plan(
-        self,
-        new_partials: DataFrame,
-        tier: str,
-        affected: list[str],
-        replace: bool = False,
-        merge_days: list[str] | None = None,
+        self, new_partials: DataFrame, tier: str, merge_days: list[str]
     ) -> DataFrame:
-        """MERGE plan for one tier against its committed snapshot.
+        """MERGE plan for one tier: ``new_partials`` fold into the committed
+        version of each of ``merge_days``; every other day they hold is
+        staged as the day's complete new content.
 
-        Associative combine: n/s1/s2 sum, vmin min, vmax max — so
-        late/duplicate windows fold exactly, and re-staging the same input
-        (replay with the same run_id) overwrites the same version dirs
-        byte-identically.
-
-        ``replace``: the partials are already the COMPLETE content of every
-        affected day (e.g. cascaded from a tier whose affected-day versions
-        were just merged) — skip the existing-union entirely; the staged
-        day version simply supersedes the old one.
-
-        ``merge_days``: exception list for ``replace=True`` — days whose
-        partials are NOT complete (the finer tier had no committed version
-        to fold the day's history from, e.g. a late row for a day already
-        TTL-expired out of 1m while 1h/1d still retain it). Those days keep
-        the existing-union semantics so the longer-TTL rollup is preserved
-        instead of silently replaced by the late rows alone.
+        Associative combine (`fold_partials`): late/duplicate windows fold
+        exactly, and re-staging the same input (replay with the same run_id)
+        overwrites the same version dirs byte-identically.
         """
-        new_partials = new_partials.withColumn(
+        new = new_partials.withColumn(
             "day", F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
-        )
-        union_days = list(merge_days or []) if replace else list(affected)
-        # Read ONLY the union days' committed versions — the manifest is the
+        ).select(*TIER_KEY, *PARTIALS, "day")
+        # Read ONLY the merged days' committed versions — the manifest is the
         # partition index, so this opens a handful of day dirs instead of
         # scanning the whole tier (a full-history read of the 10y 1d tier to
         # recover one resurrected day was the measured worst case).
         committed = self.manifest.tiers.get(tier) or {}
-        pointers = {d: v for d, v in committed.items() if d in set(union_days)}
+        pointers = {d: v for d, v in committed.items() if d in set(merge_days)}
         if not pointers:
-            # bootstrap load (or pure replace): partials come out of a
-            # groupBy on exactly (TIER_KEY, bucket day) — already one row
-            # per key, so the merge re-aggregation would be an identity
-            # shuffle of the full tier; skip it.
-            return new_partials.select(*TIER_KEY, *PARTIALS, "day")
-        combined = new_partials.select(*TIER_KEY, *PARTIALS, "day")
-        old = self.read_versions(tier, pointers).select(
-            *TIER_KEY, *PARTIALS, "day"
+            return new
+        old = self.read_versions(tier, pointers).select(*TIER_KEY, *PARTIALS, "day")
+        # the series-key exchange keeps every segment in one write task (see
+        # merge_tiers); the fold's clustering is a superset, so it adds none
+        return fold_partials(
+            new.unionByName(old).repartition(*SERIES_COLS), *TIER_KEY, "day"
         )
-        return combined.unionByName(old).groupBy(*TIER_KEY, "day").agg(
-            F.sum("n").alias("n"),
-            F.sum("s1").alias("s1"),
-            F.sum("s2").alias("s2"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        )
+
+    def _publish(self, src: str, tier: str, day: str, run_id: str) -> dict:
+        """Move a staged day dir to its version dir; return its lineage row.
+        Not yet visible: `commit_run` swaps the manifest pointer."""
+        dst = self._day_dir(tier, day, run_id)
+        if os.path.isdir(dst):
+            shutil.rmtree(dst)  # replayed run_id: idempotent overwrite
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.replace(src, dst)
+        files = _parquet_files(dst)
+        # rows from the parquet footers: counting them costs no Spark job
+        rows = sum(pq.read_metadata(f).num_rows for f in files)
+        size = sum(os.path.getsize(f) for f in files)
+        return {"tier": tier, "day": day, "rows": rows, "bytes": size}
 
     def merge_tiers(
         self,
         partials_by_tier: dict[str, DataFrame],
         run_id: str,
         affected: list[str],
-        replace: bool = False,
-        distribute: bool = True,
         merge_days: list[str] | None = None,
     ) -> tuple[list[dict], dict[str, dict[str, str]]]:
         """Stage the MERGE of EVERY tier's partials as new day versions in
@@ -317,12 +279,20 @@ class RollupStore:
         same for every tier of one batch (day truncation of the same bucket
         range), so callers fold it into their watermark aggregation.
 
+        ``merge_days``: the days whose partials fold into the committed day
+        version; ``None`` means every affected day. A day left out is
+        REPLACED: its partials must be the day's complete content (e.g.
+        cascaded from a finer tier whose day was just merged).
+
+        Layout: every partials plan must arrive hash-distributed on the
+        series key (an aggregation clustered on a superset of it reuses
+        that exchange); this write adds no shuffle of its own.
+
         Returns (lineage, pointers) with pointers = {tier: {day: run_id}}.
         """
+        union_days = affected if merge_days is None else merge_days
         plans = [
-            self._merged_tier_plan(
-                df, tier, affected, replace=replace, merge_days=merge_days
-            ).withColumn("tier", F.lit(tier))
+            self._merged_tier_plan(df, tier, union_days).withColumn("tier", F.lit(tier))
             for tier, df in partials_by_tier.items()
         ]
         merged = plans[0]
@@ -334,22 +304,13 @@ class RollupStore:
         # MERGE produces anyway). Row counts for lineage/validation come
         # from the staged files' parquet footers afterwards (no Spark job).
         #
-        # ``distribute=True``: repartition by (tier, day, conv_id-hash) — NOT
-        # by partition dirs alone: one shuffle partition per (tier, day)
-        # would serialize the write to #dirs tasks and leave one giant file
-        # per partition, strangling downstream scan parallelism. Multiple
-        # files per dir is fine (and matches how an Iceberg MERGE
-        # distributes its writes). No explicit partition count, so AQE can
-        # coalesce a tiny batch's write to a task (and file) or two.
-        #
-        # ``distribute=False``: the caller guarantees the partials are
-        # already hash-distributed by the series key (retention
-        # pre-partitions the raw series, which the 1m groupBy then reuses)
-        # — writing directly saves a FULL second shuffle of the merged tier,
-        # the single largest exchange in the job at finest-tier scale. Each task then writes one file per
-        # (tier, day) dir it holds rows for; with the series-key layout a
-        # conversation's rows stay colocated in one file, which is exactly
-        # what lets the 1h/1d cascade's map-side combine collapse 60:1.
+        # The one layout rule: each write task holds a disjoint series-key
+        # hash range of each tier (a union concatenates its inputs'
+        # partitions), so a (series, metric, tier, day) segment never spans
+        # two files, and a conversation's rows stay colocated — what lets the
+        # 1h/1d cascade's map-side combine collapse 60:1. Writing straight
+        # from the series-key exchange also saves a FULL second shuffle of
+        # the merged tier, the single largest exchange at finest-tier scale.
         # Sort within partitions by the full segment key + time. The dynamic
         # partitionBy write needs a local sort on (tier, day) anyway (one
         # open writer per dir); widening it to the series key and
@@ -359,8 +320,6 @@ class RollupStore:
         # codec can stream segments straight off the scan with no shuffle
         # (operators/compress.py compress_points_colocated).
         staging = os.path.join(self.base, f"_staging-{run_id}")
-        if distribute:
-            merged = merged.repartition("tier", "day", "conv_id")
         merged = merged.sortWithinPartitions(
             "tier", "day", *SERIES_COLS, "metric", "bucket_start"
         )
@@ -405,14 +364,8 @@ class RollupStore:
         lineage = []
         for tier, day in staged:
             src = os.path.join(staging, f"tier={tier}", f"day={day}")
-            dst = self._day_dir(tier, day, run_id)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)  # replayed run_id: idempotent overwrite
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
+            lineage.append(self._publish(src, tier, day, run_id))
             pointers.setdefault(tier, {})[day] = run_id
-            rows, size = _file_stats(_parquet_files(dst))
-            lineage.append({"tier": tier, "day": day, "rows": rows, "bytes": size})
         shutil.rmtree(staging, ignore_errors=True)
         return lineage, pointers
 
@@ -527,17 +480,11 @@ class RollupStore:
                 .write.mode("overwrite")
                 .parquet(stage_day)
             )
-            dst = self._day_dir(tier, day, run_id)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(stage_day, dst)
-            new_pointers[day] = run_id
-            rows, size = _file_stats(self._day_files(tier, day, run_id))
             lineage.append(
-                {"tier": tier, "day": day, "rows": rows, "bytes": size,
+                {**self._publish(stage_day, tier, day, run_id),
                  "compacted_to_files": want}
             )
+            new_pointers[day] = run_id
         shutil.rmtree(staging, ignore_errors=True)
         self.commit_run(
             run_id, self.manifest.watermark, lineage, {tier: new_pointers}

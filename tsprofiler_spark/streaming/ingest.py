@@ -40,8 +40,11 @@ from pyspark.sql.types import (
 )
 
 from tsprofiler_spark.config import Settings
-from tsprofiler_spark.operators.rollup import TIER_TRUNC
-from tsprofiler_spark.plans.retention import merge_transcript_batch, scan_batch
+from tsprofiler_spark.plans.retention import (
+    merge_transcript_batch,
+    scan_batch,
+    tier_ttls,
+)
 from tsprofiler_spark.plans.storage import RollupStore
 
 TRANSCRIPTS_SCHEMA = StructType(
@@ -122,6 +125,7 @@ def process_microbatch(
     resurrected-day machinery (an expired day's next late row recreates a
     flagged partial 1m day). Cheap: a manifest day-list scan + pointer
     commit; no Spark job."""
+    ttls = tier_ttls(tiers_cfg)
     run_id = f"{stream_id}-{batch_id}"
     if store.manifest.has_run(run_id):
         return []  # at-least-once replay of a committed batch
@@ -143,10 +147,8 @@ def process_microbatch(
     lineage = merge_transcript_batch(
         batch, store, run_id, watermark, affected=affected
     )
-    if tiers_cfg:
-        for tier, cfg in tiers_cfg.items():
-            if tier in TIER_TRUNC:
-                store.expire(tier, cfg["ttl_days"])
+    for tier, ttl in ttls.items():
+        store.expire(tier, ttl)
     return lineage
 
 
@@ -178,15 +180,8 @@ def start_rollup_stream(
     """
     import uuid
 
-    # checked once here: per batch, a malformed dict raised a KeyError only
-    # after that batch's merge had committed
-    for tier, cfg in (tiers_cfg or {}).items():
-        ttl = cfg.get("ttl_days") if isinstance(cfg, dict) else None
-        if tier in TIER_TRUNC and type(ttl) not in (int, float):
-            raise ValueError(
-                f"tiers_cfg[{tier!r}] needs a numeric 'ttl_days' (the shape "
-                f"of config.DEFAULT_TIERS), got {cfg!r}"
-            )
+    # fail at the call, before the query starts, not inside foreachBatch
+    tier_ttls(tiers_cfg)
     stream_id = "stream-" + uuid.uuid5(
         uuid.NAMESPACE_URL, os.path.abspath(checkpoint_dir)
     ).hex[:12]

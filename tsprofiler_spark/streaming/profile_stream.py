@@ -81,7 +81,10 @@ def _make_chunk_fn(settings: Settings, idle_timeout_ms: int | None = None):
     states = settings.states
     fixed_min = settings.fixed_min
     fixed_max = settings.fixed_max
-    assert settings.fix_bound, "streaming chunking requires fixed bounds"
+    # a real check, not `assert` — python -O would compile that out and
+    # silently discretize against the default fixed bounds
+    if not settings.fix_bound:
+        raise ValueError("streaming chunking requires fix_bound")
 
     def chunk_fn(
         key: Tuple[Any, ...],
