@@ -102,7 +102,7 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     wm, affected = transcripts.agg(F.max("ts"), touched_days()).collect()[0]
     affected = [d.isoformat() for d in affected]
 
-    # "crashed" attempt: stage the 1m tier under the SAME run_id the real
+    # "crashed" attempt: stage every tier under the SAME run_id the real
     # batch will use, then stop — nothing committed
     run_id = "stream-7"
     _lin, ptrs = store.merge_tiers(
@@ -269,10 +269,10 @@ def test_read_tier_day_range_prunes_paths(spark, transcripts, tmp_path):
 def test_late_row_after_1m_expiry_preserves_coarse_tiers(spark, transcripts, tmp_path):
     """A late row for a day already TTL-expired out of the 1m tier (tier
     TTLs differ: 1m expires first, 1h/1d retain the day) must fold
-    ADDITIVELY into the surviving 1h/1d day rollups. Before the
-    merge_days fix, the replace=True cascade rebuilt those days from the
-    staged 1m content — which for an expired day is the late rows ALONE —
-    silently destroying months of committed coarse-tier history."""
+    ADDITIVELY into the surviving 1h/1d day rollups (the day is one of
+    merge_tiers' ``additive_days``). Rebuilding those days from the merged
+    1m content — which for an expired day is the late rows ALONE — would
+    silently destroy months of committed coarse-tier history."""
     from tsprofiler_spark.plans.retention import merge_transcript_batch
 
     store = RollupStore(spark, str(tmp_path / "s"))
@@ -554,3 +554,103 @@ def test_ttl_late_replay_restart_lifecycle(spark, transcripts, tmp_path):
     q.awaitTermination(120)
     assert day_totals(store, "1h", day) == before_1h + n1 + n2
     assert len(store.manifest.runs) == runs_before
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_crash_at_kth_publish_then_replay_or_retry(
+    spark, transcripts, tmp_path, monkeypatch, k
+):
+    """A late batch into a TTL-resurrected day stages three day versions
+    (1m, 1h, 1d). Crash at the k-th `_publish`, then:
+    (a) a replay with the same run_id converges to a clean store's tiers
+    and `partial` flags;
+    (b) a retry under a NEW run_id (its batch grew by a row) leaves no
+    orphan version dir of the crashed run and no staging dir."""
+    import shutil
+
+    from tsprofiler_spark.plans.retention import merge_transcript_batch
+
+    base = RollupStore(spark, str(tmp_path / "base"))
+    incremental_run(
+        transcripts,
+        base,
+        SETTINGS,
+        tiers_cfg={"1m": {"ttl_days": 1}, "1h": {"ttl_days": 365}, "1d": {"ttl_days": 365}},
+        expire=True,
+    )
+    day = sorted(set(base.manifest.tiers["1h"]) - set(base.manifest.tiers["1m"]))[0]
+    wm = base.manifest.watermark
+    day_rows = transcripts.where(F.to_date("ts") == day)
+    late = day_rows.where(F.col("turn_idx") % 5 == 0)
+    extra = day_rows.where(F.col("turn_idx") % 5 != 0).orderBy("conv_id", "turn_idx")
+    grown = late.unionByName(extra.limit(1))
+
+    def store_copy(name):
+        shutil.copytree(base.base, str(tmp_path / name))
+        return RollupStore(spark, str(tmp_path / name))
+
+    clean = store_copy("clean")
+    merge_transcript_batch(late, clean, "late-1", wm)
+
+    publish = RollupStore._publish
+    hits = []
+
+    def crashing(self, *a, **kw):
+        hits.append(a)
+        if len(hits) == k:
+            raise RuntimeError(f"crash at publish {k}")
+        return publish(self, *a, **kw)
+
+    def crash(store):
+        hits.clear()
+        monkeypatch.setattr(RollupStore, "_publish", crashing)
+        with pytest.raises(RuntimeError, match="crash at publish"):
+            merge_transcript_batch(late, store, "late-1", wm)
+        monkeypatch.setattr(RollupStore, "_publish", publish)
+        assert len(hits) == k  # the crash point was reached
+        assert not store.manifest.has_run("late-1")
+
+    # (a) replay under the same run_id
+    replayed = store_copy("replayed")
+    crash(replayed)
+    merge_transcript_batch(late, replayed, "late-1", wm)
+    for tier in ("1m", "1h", "1d"):
+        assert _tier_rows(replayed, tier) == _tier_rows(clean, tier), tier
+    assert replayed.manifest.partial == clean.manifest.partial
+    assert day in replayed.manifest.partial_days("1m")
+
+    # (b) retry under a new run_id
+    retried = store_copy("retried")
+    crash(retried)
+    merge_transcript_batch(grown, retried, "late-2", wm)
+    assert not [d for d in os.listdir(retried.base) if d.startswith("_staging-")]
+    for tier, days in retried.manifest.tiers.items():
+        for d, ver in days.items():
+            day_dir = os.path.dirname(retried._day_dir(tier, d, ver))
+            assert os.listdir(day_dir) == [f"v={ver}"], (tier, d)
+
+
+def test_manifest_save_fsyncs_file_then_replaces_then_fsyncs_dir(tmp_path, monkeypatch):
+    """The manifest commit is durable: the temp file is fsynced before the
+    atomic `os.replace`, and its directory after it."""
+    import stat
+
+    from tsprofiler_spark.plans.storage import Manifest
+
+    calls = []
+    fsync, replace = os.fsync, os.replace
+
+    def record_fsync(fd):
+        calls.append("dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "file")
+        fsync(fd)
+
+    def record_replace(src, dst):
+        calls.append("replace")
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", record_fsync)
+    monkeypatch.setattr(os, "replace", record_replace)
+    m = Manifest(path=str(tmp_path / "store" / "manifest.json"))
+    m.record_run("run-1", "2025-01-01 00:00:00", [])
+    assert calls == ["file", "replace", "dir"]
+    assert Manifest.load(m.path).has_run("run-1")

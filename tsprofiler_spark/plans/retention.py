@@ -2,9 +2,9 @@
 
 Each run reads only rows with ``ts > manifest.watermark`` (on Iceberg:
 incremental snapshot read; here: predicate pushed to the parquet scan),
-computes the finest-tier partials once, cascades coarser tiers from those
-partials, MERGEs each tier, applies TTL expiry, and commits the checkpoint
-manifest with per-partition lineage. Killing the job between tiers and
+computes the finest-tier partials once, MERGEs them into every tier in one
+fold and one write, applies TTL expiry, and commits the checkpoint
+manifest with per-partition lineage. Killing the job mid-MERGE and
 re-running is safe: MERGE is idempotent and the manifest commits last.
 """
 
@@ -17,11 +17,7 @@ from pyspark.sql import functions as F
 
 from tsprofiler_spark.config import DEFAULT_TIERS, Settings
 from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
-from tsprofiler_spark.operators.rollup import (
-    TIER_TRUNC,
-    cascade_partials,
-    tier_partials,
-)
+from tsprofiler_spark.operators.rollup import TIER_TRUNC, tier_partials
 from tsprofiler_spark.plans.storage import RollupStore
 
 
@@ -101,45 +97,37 @@ def merge_transcript_batch(
         return []  # replayed micro-batch / re-run — already committed
     if affected is None:
         affected = scan_batch(transcripts)[2]
-    # ONE exchange for the whole finest-tier stage: the raw series rows are
-    # hash-distributed by the series key ONCE. The 1m groupBy clusters on a
-    # SUPERSET of the series cols, so EnsureRequirements inserts no second
-    # exchange, and the staged write runs straight from the aggregation
-    # output (merge_tiers' layout rule) — at minute granularity a map-side
-    # combine would save almost nothing (every turn is its own bucket).
-    # Staged files are conversation-colocated, which lets the 1h cascade's
-    # map-side combine collapse 60:1 before its (tiny) shuffle.
+    # ONE exchange for the whole MERGE of a batch into an empty day: the
+    # raw series rows are hash-distributed by the series key ONCE. The 1m
+    # groupBy and the tier fold both cluster on a SUPERSET of the series
+    # cols, so EnsureRequirements inserts no second exchange, and the staged
+    # write runs straight from the fold (merge_tiers' layout rule) — at
+    # minute granularity a map-side combine would save almost nothing
+    # (every turn is its own bucket). No executor-memory cache: all three
+    # tiers are one fold of the same rows, so nothing is read twice.
     #
     # Skew note: one task now owns a whole conversation-series — the same
     # per-conv concentration every gap-fill/bucketize window in the engine
     # already has; for pathological single-hot-series corpora the segmented
     # variants (operators/ingest.py gap_fill_segmented, bucketize_segmented)
     # are the documented salting fallback.
-    # Two-step staging, ZERO executor-memory caches: the finest (1m)
-    # partials go raw-scan -> groupBy -> staged parquet in one write job,
-    # then the 1h/1d cascades read that STAGED PARQUET back (columnar,
-    # compressed — storage is the materialization, exactly what cascading
-    # from a real Iceberg 1m table does). Caching 40M+ deserialized partial
-    # rows in the executor heap instead measurably throttles the N-executor
-    # configuration (spill + GC) without saving any scan of the raw data.
     finest = _finest_partials(transcripts)
-    lineage, pointers = store.merge_tiers({"1m": finest}, run_id, affected=affected)
-    staged_1m = store.read_versions("1m", pointers["1m"])
     # Days whose 1m content is INCOMPLETE (TTL-resurrected): a late row for
     # a day already expired out of 1m (tier TTLs differ — 1m 30d vs 1h 180d
-    # / 1d 10y) stages a 1m day holding ONLY late rows, and a full 1h/1d
-    # replace would destroy the surviving long-TTL history for that day.
+    # / 1d 10y) stages a 1m day holding ONLY late rows, and rebuilding 1h/1d
+    # from it would destroy the surviving long-TTL history for that day.
     # Two sources, both needed:
     #   * freshly resurrected this batch: no committed 1m version but a
     #     coarser tier still holds the day;
     #   * flagged `partial` in the manifest by an EARLIER late batch — the
     #     1m day IS committed now, but still lacks the expired history, so
-    #     pointer presence alone would wrongly route it to the replace path
-    #     and rebuild 1h/1d from late rows only (the flag is durable for
-    #     exactly this: the streaming path never re-expires between
-    #     batches, so without it the second late batch for a day silently
-    #     destroyed the coarse rollup).
-    # Both sets are read from the manifest BEFORE commit_run, so a
+    #     pointer presence alone would wrongly rebuild 1h/1d from late rows
+    #     only (the flag is durable for exactly this: the streaming path
+    #     never re-expires between batches, so without it the second late
+    #     batch for a day silently destroyed the coarse rollup).
+    # On these days only this batch's increment folds into 1h/1d (the
+    # committed 1m day also holds earlier late batches, which 1h/1d already
+    # contain). Both sets are read from the manifest BEFORE commit_run, so a
     # crash-replay of this run_id stages the identical plan. Pinned by
     # test_late_row_after_1m_expiry / test_second_late_batch_after_expiry.
     committed_1m = store.manifest.tiers.get("1m") or {}
@@ -149,61 +137,23 @@ def merge_transcript_batch(
     partial_1m = store.manifest.partial_days("1m")
     # Both conditions require a SURVIVING coarse version: a partial-flagged
     # day whose 1h/1d pointers are gone (e.g. a selective coarse-tier
-    # expire) has nothing to preserve — the replace path cascading the
-    # COMPLETE staged 1m day is then exactly right (additive-increment
-    # would rebuild the coarse day from only this batch's rows, dropping
-    # earlier late batches still committed in 1m). Brand-new days (in no
-    # tier yet) stay on the replace fast path for the same reason.
+    # expire) has nothing to preserve — rebuilding the coarse day from the
+    # COMPLETE merged 1m day is then exactly right (the increment alone
+    # would drop earlier late batches still committed in 1m). Brand-new
+    # days (in no tier yet) are rebuilt for the same reason.
     resurrected = [
         d
         for d in affected
         if d in committed_coarse and (d not in committed_1m or d in partial_1m)
     ]
-    # Cascade source per day class:
-    #   * replaced days — the staged (complete) 1m day content;
-    #   * FRESHLY resurrected days (no committed 1m version) — also the
-    #     staged content: with nothing merged in, it IS this batch's
-    #     increment, and the columnar staged parquet is cheaper than
-    #     re-aggregating the raw batch;
-    #   * flagged partial days (committed 1m, incomplete) — ONLY THIS
-    #     BATCH'S increment (`finest`): the staged day also contains
-    #     earlier late batches' rows, which the additive fold already
-    #     merged into 1h/1d — cascading the staged content again would
-    #     double-count them.
-    flagged = [d for d in resurrected if d in committed_1m]
-    if flagged:
-        day_of = F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
-        cascade_src = staged_1m.drop("day").where(
-            ~day_of.isin(flagged)
-        ).unionByName(finest.where(day_of.isin(flagged)))
-    else:
-        cascade_src = staged_1m.drop("day")
-    # 1d cascades from the 1h partials (not from 1m): sums/min/max compose,
-    # and the 1h->1d re-aggregation reads 60x fewer rows. No cache: both
-    # tiers land in ONE write, whose plan holds the 1h series-key exchange
-    # twice — Spark reuses it, so the 1m files are scanned once. That
-    # exchange is the write's layout (see merge_tiers): the 1d fold and any
-    # merged-day union cluster on a superset of the series key.
-    coarse_1h = cascade_partials(cascade_src, "1h").repartition(*SERIES_COLS)
-    coarse_1d = cascade_partials(coarse_1h, "1d")
-    # Only the resurrected days merge: their cascaded increment folds
-    # ADDITIVELY into the existing 1h/1d day, preserving the long-TTL
-    # rollup. Every other day's cascade source is the staged 1m day's
-    # COMPLETE merged content, so its 1h/1d partials replace the day —
-    # folding them into the existing 1h/1d would double-count exactly the
-    # previously merged data.
-    tier_lineage, tier_ptrs = store.merge_tiers(
-        {"1h": coarse_1h, "1d": coarse_1d},
-        run_id,
-        affected=affected,
-        merge_days=resurrected,
+    lineage, pointers = store.merge_tiers(
+        {"1m": finest}, run_id, affected, additive_days=resurrected
     )
-    lineage += tier_lineage
-    pointers.update(tier_ptrs)
     # the resurrected days' new 1m versions still lack the expired history:
     # flag them durably IN THE SAME atomic manifest commit; every other
-    # staged 1m day took the replace path (no coarse history left to
-    # preserve), so a flag it still carries is stale and clears
+    # staged day rebuilt its 1h/1d from the complete 1m day (no coarse
+    # history left to preserve), so a flag it still carries is stale and
+    # clears
     store.commit_run(
         run_id, watermark, lineage, pointers, partial_days={"1m": resurrected}
     )

@@ -29,14 +29,20 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsprofiler_spark.operators.ingest import SERIES_COLS
-from tsprofiler_spark.operators.rollup import PARTIALS, fold_partials
+from tsprofiler_spark.operators.rollup import (
+    CASCADE,
+    PARTIALS,
+    TIER_TRUNC,
+    fold_partials,
+)
 
 TIER_KEY = SERIES_COLS + ["metric", "bucket_start"]
 # Data columns of every tier file. Reads pass it explicitly: inferring it
@@ -111,7 +117,15 @@ class Manifest:
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         with open(tmp, "w") as f:
             json.dump({k: getattr(self, k) for k in _STATE}, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())  # the content is on disk before the swap
         os.replace(tmp, self.path)  # THE atomic commit point
+        # ... and the swap itself survives a power failure
+        fd = os.open(os.path.dirname(self.path), os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     def record_run(
         self,
@@ -213,35 +227,6 @@ class RollupStore:
             return None
         return self.read_versions(tier, pointers)
 
-    def _merged_tier_plan(
-        self, new_partials: DataFrame, tier: str, merge_days: list[str]
-    ) -> DataFrame:
-        """MERGE plan for one tier: ``new_partials`` fold into the committed
-        version of each of ``merge_days``; every other day they hold is
-        staged as the day's complete new content.
-
-        Associative combine (`fold_partials`): late/duplicate windows fold
-        exactly, and re-staging the same input (replay with the same run_id)
-        overwrites the same version dirs byte-identically.
-        """
-        new = new_partials.withColumn(
-            "day", F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
-        ).select(*TIER_KEY, *PARTIALS, "day")
-        # Read ONLY the merged days' committed versions — the manifest is the
-        # partition index, so this opens a handful of day dirs instead of
-        # scanning the whole tier (a full-history read of the 10y 1d tier to
-        # recover one resurrected day was the measured worst case).
-        committed = self.manifest.tiers.get(tier) or {}
-        pointers = {d: v for d, v in committed.items() if d in set(merge_days)}
-        if not pointers:
-            return new
-        old = self.read_versions(tier, pointers).select(*TIER_KEY, *PARTIALS, "day")
-        # the series-key exchange keeps every segment in one write task (see
-        # merge_tiers); the fold's clustering is a superset, so it adds none
-        return fold_partials(
-            new.unionByName(old).repartition(*SERIES_COLS), *TIER_KEY, "day"
-        )
-
     def _publish(self, src: str, tier: str, day: str, run_id: str) -> dict:
         """Move a staged day dir to its version dir; return its lineage row.
         Not yet visible: `commit_run` swaps the manifest pointer."""
@@ -261,43 +246,83 @@ class RollupStore:
         partials_by_tier: dict[str, DataFrame],
         run_id: str,
         affected: list[str],
-        merge_days: list[str] | None = None,
+        additive_days: Sequence[str] = (),
     ) -> tuple[list[dict], dict[str, dict[str, str]]]:
-        """Stage the MERGE of EVERY tier's partials as new day versions in
-        ONE write job (NOT yet visible — the caller publishes atomically via
-        `commit_run`).
+        """Stage the MERGE of one batch into EVERY tier as new day versions:
+        ONE fold and ONE write job (NOT yet visible — the caller publishes
+        atomically via `commit_run`).
 
-        All tiers union into a single (tier, day)-partitioned write instead
-        of one write job per tier: at cluster scale this is one shuffle +
-        one commit pipeline instead of three job barriers, and in the
-        scaling harness it removes two rounds of driver round-trips per
-        batch. Write-then-swap: the job lands in a staging dir, then one
-        rename per (tier, day) into the versioned location (the sandbox
-        analogue of an Iceberg multi-table snapshot commit).
+        One fold over a tier fan-out. Each input row carries ``feeds``, the
+        tiers it contributes to, and a single `fold_partials` over
+        (tier, *TIER_KEY) builds every staged (tier, day):
+
+        * new partials of tier t feed t and every coarser tier;
+        * the committed 1m version of each ``affected`` day feeds every
+          tier: the day is rebuilt from its complete 1m content;
+        * on an ``additive_days`` day (incomplete 1m content, e.g. a
+          TTL-resurrected day) the committed 1m version feeds only 1m, and
+          the committed 1h/1d versions feed their own tier, so the batch's
+          increment folds ADDITIVELY into the surviving coarse history.
+
+        Associative combine: late/duplicate windows fold exactly, and
+        re-staging the same input (replay with the same run_id) overwrites
+        the same version dirs byte-identically. Write-then-swap: the job
+        lands in a staging dir, then one rename per (tier, day) into the
+        versioned location (the sandbox analogue of an Iceberg multi-table
+        snapshot commit).
 
         ``affected`` is the set of touched yyyy-MM-dd day partitions — the
         same for every tier of one batch (day truncation of the same bucket
-        range), so callers fold it into their watermark aggregation.
-
-        ``merge_days``: the days whose partials fold into the committed day
-        version; ``None`` means every affected day. A day left out is
-        REPLACED: its partials must be the day's complete content (e.g.
-        cascaded from a finer tier whose day was just merged).
+        range), so callers fold it into their watermark aggregation. Only
+        those days' committed versions are read: the manifest is the
+        partition index.
 
         Layout: every partials plan must arrive hash-distributed on the
-        series key (an aggregation clustered on a superset of it reuses
-        that exchange); this write adds no shuffle of its own.
+        series key. A union with committed versions is repartitioned by it
+        once; the fold clusters on a superset of it, and the write adds no
+        shuffle of its own.
 
         Returns (lineage, pointers) with pointers = {tier: {day: run_id}}.
         """
-        union_days = affected if merge_days is None else merge_days
-        plans = [
-            self._merged_tier_plan(df, tier, union_days).withColumn("tier", F.lit(tier))
-            for tier, df in partials_by_tier.items()
+
+        def feeding(df: DataFrame, feeds: Column) -> DataFrame:
+            return df.select(*TIER_KEY, *PARTIALS, feeds.alias("feeds"))
+
+        def tiers(names: list[str]) -> Column:
+            return F.array(*map(F.lit, names))
+
+        inputs = [
+            feeding(df, tiers(CASCADE[CASCADE.index(t):]))
+            for t, df in partials_by_tier.items()
         ]
-        merged = plans[0]
-        for p in plans[1:]:
-            merged = merged.unionByName(p)
+        additive = sorted(additive_days)
+        for t in CASCADE:
+            # a coarse version is read only where it is folded into: on
+            # every other day the committed 1m day rebuilds it
+            days = set(affected if t == CASCADE[0] else additive)
+            committed = self.manifest.tiers.get(t) or {}
+            pointers = {d: v for d, v in committed.items() if d in days}
+            if pointers:
+                feeds = F.when(F.col("day").isin(*additive), tiers([t]))
+                old = self.read_versions(t, pointers)
+                inputs.append(feeding(old, feeds.otherwise(tiers(CASCADE))))
+        rows = inputs[0]
+        for df in inputs[1:]:
+            rows = rows.unionByName(df)
+        if len(inputs) > 1:
+            rows = rows.repartition(*SERIES_COLS)
+        tier = F.col("tier")
+        bucket = F.when(
+            tier == CASCADE[0], F.date_trunc(TIER_TRUNC[CASCADE[0]], "bucket_start")
+        )
+        for t in CASCADE[1:]:
+            bucket = bucket.when(tier == t, F.date_trunc(TIER_TRUNC[t], "bucket_start"))
+        fanned = rows.select(
+            *TIER_KEY, *PARTIALS, F.explode("feeds").alias("tier")
+        ).withColumn("bucket_start", bucket)
+        merged = fold_partials(fanned, "tier", *TIER_KEY).withColumn(
+            "day", F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
+        )
         # ONE write job, NO executor-memory cache of the merged data: the
         # staged parquet itself is the materialization (columnar, compressed
         # — a fraction of a deserialized JVM cache, and what an Iceberg
@@ -305,12 +330,11 @@ class RollupStore:
         # from the staged files' parquet footers afterwards (no Spark job).
         #
         # The one layout rule: each write task holds a disjoint series-key
-        # hash range of each tier (a union concatenates its inputs'
-        # partitions), so a (series, metric, tier, day) segment never spans
-        # two files, and a conversation's rows stay colocated — what lets the
-        # 1h/1d cascade's map-side combine collapse 60:1. Writing straight
-        # from the series-key exchange also saves a FULL second shuffle of
-        # the merged tier, the single largest exchange at finest-tier scale.
+        # hash range (the fold's input exchange), so a (series, metric,
+        # tier, day) segment never spans two files and a conversation's
+        # rows stay colocated. Writing straight from the fold also saves a
+        # FULL second shuffle of the merged tiers, the single largest
+        # exchange at finest-tier scale.
         # Sort within partitions by the full segment key + time. The dynamic
         # partitionBy write needs a local sort on (tier, day) anyway (one
         # open writer per dir); widening it to the series key and
@@ -378,21 +402,22 @@ class RollupStore:
         partial_days: dict[str, list[str]] | None = None,
     ) -> None:
         """Atomically publish every staged tier version + watermark, then GC
-        superseded version dirs (safe post-commit: readers only follow the
-        manifest)."""
-        old = {
-            tier: dict(self.manifest.tiers.get(tier, {})) for tier in pointers
-        }
+        (safe post-commit: readers only follow the manifest): each day the
+        commit points keeps only its pointed version dir, and no staging
+        dir survives — so superseded versions AND a crashed earlier run's
+        files go. The store is single-writer by contract."""
         self.manifest.record_run(
             run_id, watermark, lineage, pointers, partial_days=partial_days
         )
         for tier, days in pointers.items():
             for day, ver in days.items():
-                prev = old.get(tier, {}).get(day)
-                if prev is not None and prev != ver:
-                    shutil.rmtree(
-                        self._day_dir(tier, day, prev), ignore_errors=True
-                    )
+                day_dir = os.path.dirname(self._day_dir(tier, day, ver))
+                for v in os.listdir(day_dir):
+                    if v != f"v={ver}":
+                        shutil.rmtree(os.path.join(day_dir, v), ignore_errors=True)
+        for d in os.listdir(self.base):
+            if d.startswith("_staging-"):
+                shutil.rmtree(os.path.join(self.base, d), ignore_errors=True)
 
     def expire(self, tier: str, ttl_days: int) -> list[str]:
         """TTL expiry: drop whole day partitions older than watermark - ttl
